@@ -14,6 +14,13 @@ handlers each launch their own distributed jobs, and ordering them
 keeps sink commits deterministic — K1 before K4 is load-bearing for
 the replay guards).
 
+The reference parses and diffs a poll once, then hands the result to
+every listener. A DataFrame is a plan, not a result: each handler's
+action would re-run it (for E1 that is the parse and the CDC state
+operator). So a DataFrame dispatched to more than one handler is
+cached for the duration of the dispatch and released afterwards, also
+when a handler raises; a single handler reads its frame uncached.
+
 Adding a new sink = one ``router.on("chat", fn)`` registration; no
 pipeline function edits — the extension seam SURVEY §2.9 asks for.
 """
@@ -21,7 +28,25 @@ pipeline function edits — the extension seam SURVEY §2.9 asks for.
 from __future__ import annotations
 
 from collections import defaultdict
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame
+
+
+@contextmanager
+def cached(*frames: DataFrame) -> Iterator[None]:
+    """Persist ``frames`` for the block, so every action inside it
+    reads one materialisation; unpersist them on exit. Frames the
+    caller already persisted are left to the caller."""
+    mine = [df for df in frames if not df.is_cached]
+    for df in mine:
+        df.persist()
+    try:
+        yield
+    finally:
+        for df in mine:
+            df.unpersist()
 
 
 class TopicRouter:
@@ -49,9 +74,15 @@ class TopicRouter:
         matched (the reference logs unhandled topics; callers here can
         assert on it)."""
         parts = key.split(".")
-        found = False
-        for i in range(len(parts), 0, -1):
-            for handler in self._handlers.get(".".join(parts[:i]), ()):
+        handlers = [
+            handler
+            for i in range(len(parts), 0, -1)
+            for handler in self._handlers.get(".".join(parts[:i]), ())
+        ]
+        shared = [
+            a for a in (*args, *kwargs.values()) if isinstance(a, DataFrame)
+        ] if len(handlers) > 1 else []
+        with cached(*shared):
+            for handler in handlers:
                 handler(*args, **kwargs)
-                found = True
-        return found
+        return bool(handlers)

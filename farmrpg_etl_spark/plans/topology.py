@@ -25,7 +25,8 @@ from farmrpg_etl_spark.sinks.writers import (
     partial_document_update,
     upsert,
 )
-from farmrpg_etl_spark.plans.router import TopicRouter
+from farmrpg_etl_spark.plans.router import TopicRouter, cached
+from farmrpg_etl_spark.sources.landing import PAYLOAD_SCHEMA
 from farmrpg_etl_spark.streaming.flags_join import flags_resolution_join
 
 
@@ -111,6 +112,30 @@ def chat_pipeline_batch(
     return enriched
 
 
+def flag_rows(payloads: DataFrame) -> DataFrame:
+    """E2 front half: raw flags payloads → parsed flag-log rows."""
+    return parsed_rows(parse_payloads(payloads, "flags")).select(
+        "room", "ts", "username", "flags"
+    )
+
+
+def update_flags(
+    messages: ParquetTable, rows: DataFrame, batch_id: int | None
+) -> DataFrame | None:
+    """E2 back half: J1 resolve each flag row's message id against the
+    messages sink state → K2 correlated flags update. Returns the
+    resolved rows, or None while the sink is still empty."""
+    existing = messages.read()
+    if existing is None:
+        return None
+    resolved = flags_resolution_join(
+        existing.select("room", "id", "ts", "username"), rows
+    )
+    merge_update(messages, resolved, ["id"], ["flags"], batch_id=batch_id,
+                 writer="flags_update")
+    return resolved
+
+
 def flags_pipeline_batch(
     payloads: DataFrame,
     messages: ParquetTable,
@@ -118,17 +143,10 @@ def flags_pipeline_batch(
 ) -> DataFrame:
     """E2: flags payloads → parse → J1 resolve id against the messages
     sink state → K2 correlated flags update. Returns resolved rows."""
-    flags_rows = parsed_rows(parse_payloads(payloads, "flags")).select(
-        "room", "ts", "username", "flags"
-    )
-    existing = messages.read()
-    if existing is None:
-        return flags_rows.limit(0).withColumn("id", F.lit(None).cast("string"))
-    resolved = flags_resolution_join(
-        existing.select("room", "id", "ts", "username"), flags_rows
-    )
-    merge_update(messages, resolved, ["id"], ["flags"], batch_id=batch_id,
-                 writer="flags_update")
+    rows = flag_rows(payloads)
+    resolved = update_flags(messages, rows, batch_id)
+    if resolved is None:
+        return rows.limit(0).withColumn("id", F.lit(None).cast("string"))
     return resolved
 
 
@@ -139,20 +157,22 @@ def user_pipeline_batch(
     batch_id: int | None = None,
 ) -> DataFrame:
     """E3: profile payloads → parse → J4 user upsert + D4/K3 snapshot
-    append with no-op elimination. Returns parsed snapshots."""
+    append with no-op elimination. Returns parsed snapshots. The two
+    writers share one parse: the snapshots are cached while they run."""
     snaps = parsed_rows(parse_payloads(payloads, "profile")).select(
         "user_id", "ts", "username", "is_farmhand", "is_ranger"
     )
-    upsert(
-        users,
-        snaps.select(F.col("user_id").alias("id"), F.lit(None).cast("string").alias("firebase_uid")),
-        ["id"],
-        batch_id=batch_id,
-        writer="users_upsert",
-    )
-    append_snapshots_with_noop_elimination(
-        snapshots, snaps, ["user_id"], "ts", batch_id=batch_id
-    )
+    with cached(snaps):
+        upsert(
+            users,
+            snaps.select(F.col("user_id").alias("id"), F.lit(None).cast("string").alias("firebase_uid")),
+            ["id"],
+            batch_id=batch_id,
+            writer="users_upsert",
+        )
+        append_snapshots_with_noop_elimination(
+            snapshots, snaps, ["user_id"], "ts", batch_id=batch_id
+        )
     return snaps
 
 
@@ -193,8 +213,7 @@ def chat_pipeline_streaming(
     if state_ttl_ms is _TTL_DEFAULT:
         state_ttl_ms = None if checkpoint_dir is not None else 3_600_000
 
-    schema = spark.read.parquet(landing_dir).schema
-    payloads = spark.readStream.schema(schema).parquet(landing_dir)
+    payloads = spark.readStream.schema(PAYLOAD_SCHEMA).parquet(landing_dir)
     observations = chat_observations(payloads)
     changes = chat_cdc_stream(observations, state_ttl_ms=state_ttl_ms)
     router = TopicRouter()
@@ -233,24 +252,13 @@ def flags_pipeline_streaming(
     stream-stream form is ``streaming.flags_join.flags_resolution_join``;
     joining sink state instead matches the reference's Postgres path,
     db/chat.py:22-26.)"""
-    schema = spark.read.parquet(landing_dir).schema
-    payloads = spark.readStream.schema(schema).parquet(landing_dir)
-    flags_rows = parsed_rows(parse_payloads(payloads, "flags")).select(
-        "room", "ts", "username", "flags"
-    )
+    payloads = spark.readStream.schema(PAYLOAD_SCHEMA).parquet(landing_dir)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        existing = messages.read()
-        if existing is None:
-            return
-        resolved = flags_resolution_join(
-            existing.select("room", "id", "ts", "username"), batch_df
-        )
-        merge_update(messages, resolved, ["id"], ["flags"], batch_id=batch_id,
-                     writer="flags_update")
+        update_flags(messages, batch_df, batch_id)
 
     writer = (
-        flags_rows.writeStream.foreachBatch(write_batch)
+        flag_rows(payloads).writeStream.foreachBatch(write_batch)
         .outputMode("append")
         .trigger(availableNow=True)
     )

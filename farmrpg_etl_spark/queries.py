@@ -2564,18 +2564,36 @@ _TWS_ENV_CRASH_SIGNATURES = (
 )
 
 
+def _processor_frame(text: str) -> bool:
+    """True iff ``text`` relays a traceback frame in one of this
+    package's streaming modules (where every TWS processor lives),
+    named by its path or, as a worker may relay it, by file name
+    alone."""
+    import os
+    import re
+
+    here = os.path.join(os.path.dirname(os.path.abspath(__file__)), "streaming")
+    names = {f for f in os.listdir(here) if f.endswith(".py")}
+    return any(
+        "farmrpg_etl_spark/streaming/" in path or path in names
+        for path in re.findall(r'File "([^"]+)"', text)
+    )
+
+
 def _tws_env_crash(exc: Exception) -> bool:
     """True iff the exception chain carries a known environment-crash
     signature of the TWS state-protocol worker.  Analysis/plan errors
     (AnalysisException, schema mismatches) and PROCESSOR bugs —
-    recognized as a ``PythonException`` anywhere in the chain, or any
-    chain text carrying a Python traceback (the worker relays the
-    processor's ``Traceback (most recent call last)`` verbatim) — do
-    NOT match and propagate, so a broken feature cannot silently pass
-    through the batch fallback (r12 advice #1: signatures alone were
-    too loose because worker-death text accompanies processor errors
-    too; a traceback proves Python code raised, which env death never
-    produces)."""
+    recognized as a ``PythonException`` anywhere in the chain, or a
+    relayed Python traceback that passes through
+    ``farmrpg_etl_spark/streaming/`` (where every TWS processor lives)
+    — do NOT match and propagate, so a broken feature cannot silently
+    pass through the batch fallback (r12 advice #1: signatures alone
+    were too loose because worker-death text accompanies processor
+    errors too).  A traceback only through PySpark's own frames is not
+    a processor bug: a recorded ``TransformWithStateInPySpark driver
+    worker exited unexpectedly (crashed)`` arrived with one, and it is
+    exactly the crash the fallback exists for."""
     from pyspark.errors import AnalysisException, PythonException
 
     seen = []
@@ -2586,8 +2604,8 @@ def _tws_env_crash(exc: Exception) -> bool:
         seen.append(cur)
         cur = cur.__cause__ or cur.__context__
     text = " | ".join(f"{type(e).__name__}: {e}" for e in seen)
-    if "Traceback (most recent call last)" in text:
-        return False  # a relayed Python traceback = processor bug
+    if _processor_frame(text):
+        return False  # a relayed traceback through a processor = bug
     return any(sig in text for sig in _TWS_ENV_CRASH_SIGNATURES)
 
 

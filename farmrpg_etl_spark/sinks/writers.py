@@ -11,9 +11,15 @@ append).
 
 Storage: a versioned parquet table (`ParquetTable`) — a directory of
 immutable version snapshots plus a pointer file, giving atomic
-replace-on-commit and replay safety without external dependencies. On
-a production cluster the same writers target Delta/Iceberg tables
-(real MERGE INTO); the logic is identical, only `_commit` changes.
+replace-on-commit and replay safety without external dependencies.
+Versions share unchanged data files by hard link: the append-shaped
+writers (``insert_if_absent``, ``append_snapshots_with_noop_elimination``)
+write only their new rows, as one file, and link the current version's
+files into the new version, so an insert costs its batch, not its
+table. Each version stores its schema (``_SCHEMA``), so reads declare
+it instead of inferring it from the files. On a production cluster the
+same writers target Delta/Iceberg tables (real MERGE INTO); the logic
+is identical, only `_commit` changes.
 
 Scale notes: every merge is a single join keyed on the table's natural
 key (broadcast when the incoming batch is small — the common case for
@@ -31,10 +37,17 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class ParquetTable:
-    """Tiny versioned parquet table with atomic pointer commits."""
+    """Tiny versioned parquet table with atomic pointer commits.
+
+    Each version ``v<n>`` is a directory of parquet files plus a
+    ``_SCHEMA`` file holding the version's schema (Spark's reader skips
+    ``_``-prefixed files). A version may hard-link data files of the
+    version before it, so unchanged rows are never rewritten; deleting
+    an old version removes only its links."""
 
     def __init__(self, spark: SparkSession, path: str, keep_versions: int = 2):
         # keep_versions: retention window for time travel / change
@@ -66,7 +79,17 @@ class ParquetTable:
         v = self.current_version()
         if v < 0:
             return None
-        return self.spark.read.parquet(os.path.join(self.path, f"v{v}"))
+        return self._read_dir(os.path.join(self.path, f"v{v}"))
+
+    def _read_dir(self, vdir: str) -> DataFrame:
+        """Read a version with its stored schema; versions written
+        before schemas were stored fall back to inference."""
+        try:
+            with open(os.path.join(vdir, "_SCHEMA")) as f:
+                schema = StructType.fromJson(json.load(f))
+        except FileNotFoundError:
+            return self.spark.read.parquet(vdir)
+        return self.spark.read.schema(schema).parquet(vdir)
 
     def last_batch_id(self, writer: str = "default") -> int:
         try:
@@ -76,12 +99,33 @@ class ParquetTable:
             return -1
 
     def _commit(
-        self, df: DataFrame, batch_id: int | None, writer: str = "default"
+        self,
+        df: DataFrame,
+        batch_id: int | None,
+        writer: str = "default",
+        carry: bool = False,
     ) -> None:
+        """Publish ``df`` as the next version. With ``carry`` the new
+        version is the current one plus ``df``'s rows: they are written
+        as one file and the current version's data files are hard-linked
+        in beside it, so an append costs its own rows only. ``df`` must
+        then have the table's columns and types (a differing type raises
+        ``ValueError``, as in ``upsert``). The pointer swap stays the
+        commit point either way."""
+        cur = self.read() if carry else None
+        if cur is not None:
+            df = _conformed(df, cur)
         df = self._enforced(df)
         v = self.current_version() + 1
         out = os.path.join(self.path, f"v{v}")
-        df.write.mode("overwrite").parquet(out)
+        (df.coalesce(1) if carry else df).write.mode("overwrite").parquet(out)
+        if cur is not None:
+            prev = os.path.join(self.path, f"v{v - 1}")
+            for name in os.listdir(prev):
+                if name.startswith(("part-", ".part-")):  # data files + checksums
+                    os.link(os.path.join(prev, name), os.path.join(out, name))
+        with open(os.path.join(out, "_SCHEMA"), "w") as f:
+            f.write(df.schema.json())
         tmp = self._pointer + ".tmp"
         with open(tmp, "w") as f:
             f.write(str(v))
@@ -345,13 +389,30 @@ class ParquetTable:
             raise ValueError(
                 f"version {v} not retained (current={self.current_version()})"
             )
-        return self.spark.read.parquet(p)
+        return self._read_dir(p)
 
     def _already_committed(self, batch_id: int | None, writer: str = "default") -> bool:
         """Replay guard, namespaced per logical writer — different
         streaming queries writing one table have independent batch-id
         sequences."""
         return batch_id is not None and batch_id <= self.last_batch_id(writer)
+
+
+def _conformed(rows: DataFrame, table: DataFrame) -> DataFrame:
+    """``rows`` in ``table``'s column order, for files that will sit
+    beside the table's own. Missing or extra columns and changed types
+    raise: the stored files cannot be re-typed by an append. Types are
+    compared as ``dtypes`` strings, which carry no nullability (parquet
+    reads relax it anyway)."""
+    have, want = dict(rows.dtypes), dict(table.dtypes)
+    if have.keys() != want.keys():
+        raise ValueError(
+            f"batch columns {sorted(have)} differ from the table's {sorted(want)}"
+        )
+    type_drift = [(c, want[c], have[c]) for c in want if have[c] != want[c]]
+    if type_drift:
+        raise ValueError(f"batch changes column types: {type_drift}")
+    return rows.select(*table.columns)
 
 
 def insert_if_absent(
@@ -368,14 +429,12 @@ def insert_if_absent(
     if table._already_committed(batch_id, writer):
         return
     existing = table.read()
-    if existing is None:
-        merged = batch.dropDuplicates(list(key))
-    else:
-        new_rows = batch.dropDuplicates(list(key)).join(
+    new_rows = batch.dropDuplicates(list(key))
+    if existing is not None:
+        new_rows = new_rows.join(
             existing.select(*key), on=list(key), how="left_anti"
         )
-        merged = existing.unionByName(new_rows)
-    table._commit(merged, batch_id, writer)
+    table._commit(new_rows, batch_id, writer, carry=existing is not None)
 
 
 def merge_update(
@@ -508,7 +567,7 @@ def append_snapshots_with_noop_elimination(
     new_rows = joined.filter(
         F.col(f"__last_{compare[0]}").isNull() | changed
     ).select(*batch.columns)
-    snapshots._commit(existing.unionByName(new_rows), batch_id, writer)
+    snapshots._commit(new_rows, batch_id, writer, carry=True)
 
 
 def partial_document_update(

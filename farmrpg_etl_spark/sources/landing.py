@@ -69,7 +69,12 @@ def land_poll_sweep(
 ) -> int:
     """Execute one poll sweep and append payload rows to the landing
     zone (partitioned by source → partition pruning for per-source
-    consumers). Returns the number of rows landed."""
+    consumers). Returns the number of rows landed.
+
+    The sweep becomes one pandas frame, which Spark converts through
+    Arrow into a local relation: the write starts no Python worker."""
+    import pandas as pd
+
     specs = REFERENCE_POLLS if specs is None else specs
     fetch_ts = fetch_ts or datetime.now(timezone.utc)
     naive = fetch_ts.astimezone(timezone.utc).replace(tzinfo=None)
@@ -77,7 +82,8 @@ def land_poll_sweep(
     for spec in specs:
         status, body = fetcher(spec)
         rows.append((spec.source, spec.key, naive, status, body))
-    df = spark.createDataFrame(rows, PAYLOAD_SCHEMA)
+    pdf = pd.DataFrame(rows, columns=["source", "key", "fetch_ts", "status", "body"])
+    df = spark.createDataFrame(pdf, PAYLOAD_SCHEMA)
     df.write.mode("append").partitionBy("source").parquet(landing_dir)
     return len(rows)
 

@@ -17,7 +17,7 @@ FIXTURES = os.environ.get(
     "REFERENCE_FIXTURES", "/root/reference/test/scrapers/fixtures"
 )
 
-pytestmark = pytest.mark.skipif(
+needs_fixtures = pytest.mark.skipif(
     not os.path.isdir(FIXTURES), reason="reference fixtures not available"
 )
 
@@ -30,6 +30,7 @@ def load(name: str) -> bytes:
         return f.read()
 
 
+@needs_fixtures
 def test_chat_stage_end_to_end(spark):
     payloads = spark.createDataFrame(
         [
@@ -70,6 +71,7 @@ def test_quarantine_on_parse_error(spark):
     assert "timestamp" in bad[0]["error"]
 
 
+@needs_fixtures
 def test_profile_and_online_stages(spark):
     payloads = spark.createDataFrame(
         [
@@ -89,6 +91,7 @@ def test_profile_and_online_stages(spark):
     assert staff.count() == 25
 
 
+@needs_fixtures
 def test_mailbox_and_message_stages(spark):
     t_mail = datetime(2022, 6, 16, 23, 59, 59)
     payloads = spark.createDataFrame(
@@ -108,6 +111,7 @@ def test_mailbox_and_message_stages(spark):
     assert msg["subject"] == "trade ratio bot"
 
 
+@needs_fixtures
 def test_flags_stage(spark):
     payloads = spark.createDataFrame(
         [("flags", "help", T, 200, load("flags"))], PAYLOAD_SCHEMA

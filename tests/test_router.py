@@ -42,3 +42,56 @@ def test_decorator_registration_and_args():
 
     assert r.emit("users.profile", "BATCH", batch_id=7) is True
     assert seen == [("BATCH", 7)]
+
+
+def _in_cache(df) -> bool:
+    level = df.storageLevel
+    return level.useMemory or level.useDisk
+
+
+def test_fanout_caches_the_shared_frame_for_the_dispatch(spark):
+    r = TopicRouter()
+    df = spark.range(5)
+    seen = []
+    for _ in range(2):
+        r.on("chat", lambda d, b: seen.append((_in_cache(d), d.count())))
+    assert r.emit("chat.help", df, 0) is True
+    assert seen == [(True, 5), (True, 5)]
+    assert not _in_cache(df)  # released after the last handler
+
+
+def test_fanout_releases_the_frame_when_a_handler_raises(spark):
+    import pytest
+
+    r = TopicRouter()
+    df = spark.range(5)
+    r.on("chat", lambda d, b: d.count())
+
+    @r.on("chat")
+    def broken(d, b):
+        raise RuntimeError("sink failed")
+
+    with pytest.raises(RuntimeError, match="sink failed"):
+        r.emit("chat.help", df, 0)
+    assert not _in_cache(df)
+
+
+def test_single_handler_frame_is_not_cached(spark):
+    r = TopicRouter()
+    df = spark.range(5)
+    seen = []
+    r.on("flags", lambda d, b: seen.append(_in_cache(d)))
+    r.emit("flags.help", df, 0)
+    assert seen == [False]
+
+
+def test_fanout_leaves_a_caller_cached_frame_cached(spark):
+    r = TopicRouter()
+    df = spark.range(5).persist()
+    try:
+        r.on("chat", lambda d: d.count())
+        r.on("chat", lambda d: d.count())
+        r.emit("chat", df)
+        assert _in_cache(df)
+    finally:
+        df.unpersist()

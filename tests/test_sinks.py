@@ -653,3 +653,163 @@ def test_evolve_v2_full_replay_fails_loudly(spark, tmp_path):
     # relax-only replay keeps its own loud failure
     with _pytest.raises(ValueError, match="already nullable"):
         t.evolve_v2(relax_nullable=["firebase_uid"])
+
+
+# -- shared-file commits and declared read schemas ---------------------------
+
+
+def _vdir(t: ParquetTable, v: int) -> str:
+    import os
+
+    return os.path.join(t.path, f"v{v}")
+
+
+def _data_files(vdir: str) -> dict[str, int]:
+    """part file name → inode"""
+    import os
+
+    return {
+        f: os.stat(os.path.join(vdir, f)).st_ino
+        for f in os.listdir(vdir) if f.startswith("part-")
+    }
+
+
+def test_insert_carries_files_by_hard_link_and_writes_only_new_rows(spark, tmp_path):
+    t = ParquetTable(spark, str(tmp_path / "m"))
+    schema = "id string, content string"
+    insert_if_absent(
+        t, spark.createDataFrame([(f"m{i}", "old") for i in range(20)], schema),
+        ["id"], batch_id=0,
+    )
+    v0_files = _data_files(_vdir(t, 0))
+    # m0 is already stored: only m100 and m101 are new
+    insert_if_absent(
+        t, spark.createDataFrame([("m0", "dup"), ("m100", "a"), ("m101", "b")], schema),
+        ["id"], batch_id=1,
+    )
+    v1_files = _data_files(_vdir(t, 1))
+    carried = {f: ino for f, ino in v1_files.items() if f in v0_files}
+    assert carried == v0_files  # same inodes: linked, not copied
+    new = [f for f in v1_files if f not in v0_files]
+    assert len(new) == 1  # the new rows are one file
+    got = spark.read.parquet(f"{_vdir(t, 1)}/{new[0]}").collect()
+    assert sorted((r.id, r.content) for r in got) == [("m100", "a"), ("m101", "b")]
+    assert t.read().count() == 22
+
+
+def test_read_version_survives_vacuum_of_linked_versions(spark, tmp_path):
+    import pytest
+
+    t = ParquetTable(spark, str(tmp_path / "m"))
+    schema = "id string, content string"
+    for b in range(3):
+        insert_if_absent(
+            t, spark.createDataFrame([(f"m{b}", f"c{b}")], schema), ["id"], batch_id=b
+        )
+    # v2's commit vacuumed v0, whose file v1 and v2 still link
+    with pytest.raises(ValueError, match="not retained"):
+        t.read_version(0)
+    assert sorted(r.id for r in t.read_version(1).collect()) == ["m0", "m1"]
+    assert sorted(r.id for r in t.read().collect()) == ["m0", "m1", "m2"]
+
+
+def test_replayed_batch_id_writes_nothing(spark, tmp_path):
+    import os
+
+    t = ParquetTable(spark, str(tmp_path / "m"))
+    schema = "id string, content string"
+    insert_if_absent(t, spark.createDataFrame([("m1", "a")], schema), ["id"], batch_id=0)
+    b1 = spark.createDataFrame([("m2", "b")], schema)
+    insert_if_absent(t, b1, ["id"], batch_id=1)
+    listing = sorted(os.listdir(t.path)), sorted(os.listdir(_vdir(t, 1)))
+    insert_if_absent(t, b1, ["id"], batch_id=1)
+    assert t.current_version() == 1
+    assert (sorted(os.listdir(t.path)), sorted(os.listdir(_vdir(t, 1)))) == listing
+
+
+def test_crash_before_pointer_swap_keeps_old_version(spark, tmp_path, monkeypatch):
+    import pytest
+
+    from farmrpg_etl_spark.sinks import writers
+
+    t = ParquetTable(spark, str(tmp_path / "m"))
+    schema = "id string, content string"
+    insert_if_absent(t, spark.createDataFrame([("m1", "a")], schema), ["id"], batch_id=0)
+
+    def crash(*a, **k):
+        raise OSError("crash before the pointer swap")
+
+    with monkeypatch.context() as m:
+        m.setattr(writers.os, "replace", crash)
+        with pytest.raises(OSError, match="pointer swap"):
+            insert_if_absent(
+                t, spark.createDataFrame([("m2", "b")], schema), ["id"], batch_id=1
+            )
+    assert t.current_version() == 0
+    assert t.last_batch_id() == 0
+    assert [r.id for r in t.read().collect()] == ["m1"]
+    # the next commit replaces the half-written version directory
+    insert_if_absent(t, spark.createDataFrame([("m3", "c")], schema), ["id"], batch_id=1)
+    assert t.current_version() == 1
+    assert sorted(r.id for r in t.read().collect()) == ["m1", "m3"]
+
+
+def test_append_rejects_type_drift(spark, tmp_path):
+    import pytest
+
+    t = ParquetTable(spark, str(tmp_path / "m"))
+    insert_if_absent(t, spark.createDataFrame([(1, 10)], "k long, v int"), ["k"], batch_id=0)
+    with pytest.raises(ValueError, match="column types"):
+        insert_if_absent(
+            t, spark.createDataFrame([(2, 1.5)], "k long, v double"), ["k"], batch_id=1
+        )
+    snaps = ParquetTable(spark, str(tmp_path / "s"))
+    schema = "user_id long, ts timestamp, username string"
+    append_snapshots_with_noop_elimination(
+        snaps, spark.createDataFrame([(1, ts("2024-01-01 00:00:00"), "a")], schema),
+        ["user_id"], "ts", batch_id=0,
+    )
+    with pytest.raises(ValueError, match="column types"):
+        append_snapshots_with_noop_elimination(
+            snaps,
+            spark.createDataFrame(
+                [(1, ts("2024-01-02 00:00:00"), 7)], "user_id long, ts timestamp, username int"
+            ),
+            ["user_id"], "ts", batch_id=1,
+        )
+    assert t.current_version() == 0 and snaps.current_version() == 0
+
+
+def test_stored_schema_equals_inferred_for_every_writer(spark, tmp_path):
+    import os
+
+    schema = "room string, id string, content string, deleted boolean, flags int"
+    rows = [("r", "1", "a", False, 1), ("r", "2", "b", True, None)]
+    batch = spark.createDataFrame(rows, schema)
+    t = ParquetTable(spark, str(tmp_path / "t"))
+    insert_if_absent(t, batch, ["id"], batch_id=0)
+    insert_if_absent(t, spark.createDataFrame([("r", "3", "c", False, 2)], schema),
+                     ["id"], batch_id=1)
+    merge_update(t, batch.withColumn("flags", batch.flags + 1), ["id"], ["flags"],
+                 batch_id=2)
+    partial_document_update(t, batch, ["room", "id"], always_cols=["content"],
+                            conditional_cols={}, batch_id=3)
+    upsert(t, batch, ["id"], update_cols=["content"], batch_id=4)
+    snaps = ParquetTable(spark, str(tmp_path / "s"))
+    sschema = "user_id long, ts timestamp, username string, is_ranger boolean"
+    for b, role in enumerate([False, True]):
+        append_snapshots_with_noop_elimination(
+            snaps,
+            spark.createDataFrame([(1, ts(f"2024-01-0{b + 1} 00:00:00"), "a", role)], sschema),
+            ["user_id"], "ts", batch_id=b,
+        )
+    for table, n_versions in ((t, 5), (snaps, 2)):
+        assert table.current_version() == n_versions - 1
+        for v in (n_versions - 2, n_versions - 1):
+            vdir = _vdir(table, v)
+            assert os.path.exists(os.path.join(vdir, "_SCHEMA"))
+            assert table.read_version(v).schema == spark.read.parquet(vdir).schema
+    # a version written before schemas were stored is read by inference
+    os.remove(os.path.join(_vdir(t, 4), "_SCHEMA"))
+    assert t.read().schema == spark.read.parquet(_vdir(t, 4)).schema
+    assert t.read().count() == 3

@@ -19,7 +19,7 @@ from farmrpg_etl_spark.sinks.writers import ParquetTable
 FIXTURES = os.environ.get(
     "REFERENCE_FIXTURES", "/root/reference/test/scrapers/fixtures"
 )
-pytestmark = pytest.mark.skipif(
+needs_fixtures = pytest.mark.skipif(
     not os.path.isdir(FIXTURES), reason="reference fixtures not available"
 )
 
@@ -102,6 +102,7 @@ def test_flags_pipeline_resolves_and_updates(spark, tmp_path):
     assert messages.read().filter("id = '1'").first()["flags"] == 2
 
 
+@needs_fixtures
 def test_user_pipeline(spark, tmp_path):
     users = ParquetTable(spark, str(tmp_path / "users"))
     snaps = ParquetTable(spark, str(tmp_path / "snaps"))
@@ -174,3 +175,59 @@ def test_chat_pipeline_streaming(spark, tmp_path):
     q.stop()
     assert messages.read().count() == 1
     assert docs.read().first()["content"] == "hello"
+
+
+PROFILE_HTML = (
+    '<div class="card"><img src="/img/items/admin.png"> <strong>%(role)s</strong></div>'
+    '<a href="members.php?type=friended&id=%(id)s">Friends</a>'
+)
+
+
+def test_user_pipeline_shares_one_parse(spark, tmp_path):
+    users = ParquetTable(spark, str(tmp_path / "users"))
+    snaps = ParquetTable(spark, str(tmp_path / "snaps"))
+    body = (PROFILE_HTML % {"role": "Ranger", "id": 42}).encode()
+    payloads = spark.createDataFrame(
+        [("profile", "alice", T0, 200, body)], PAYLOAD_SCHEMA
+    )
+    out = user_pipeline_batch(payloads, users, snaps, batch_id=0)
+    assert not out.is_cached  # the shared parse is released after the writers
+    assert [r["id"] for r in users.read().collect()] == [42]
+    assert [(r["user_id"], r["is_ranger"]) for r in snaps.read().collect()] == [(42, True)]
+    later = spark.createDataFrame(
+        [("profile", "alice", T0 + timedelta(seconds=1), 200, body)], PAYLOAD_SCHEMA
+    )
+    user_pipeline_batch(later, users, snaps, batch_id=1)
+    assert snaps.read().count() == 1  # unchanged snapshot: no-op eliminated
+
+
+def test_chat_streaming_two_sweeps_leaves_nothing_cached(spark, tmp_path):
+    """Two landed sweeps drained by two checkpointed availableNow runs,
+    as the service does each cycle: the sinks see both polls' changes,
+    and no micro-batch stays cached after its fan-out."""
+    from farmrpg_etl_spark.sources.landing import PollSpec, land_poll_sweep
+
+    landing = str(tmp_path / "landing")
+    ckpt = str(tmp_path / "ckpt")
+    messages = ParquetTable(spark, str(tmp_path / "messages"))
+    docs = ParquetTable(spark, str(tmp_path / "docs"))
+    polls = [
+        [{"cls": "", "t": "09:00:01 AM", "u": "alice", "i": "1", "c": "hello"}],
+        [{"cls": " redstripes", "t": "09:00:01 AM", "u": "alice", "i": "1", "c": "hello"},
+         {"cls": "", "t": "09:00:02 AM", "u": "bob", "i": "2", "c": "hi @alice:"}],
+    ]
+    cached_before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    for n, poll in enumerate(polls):
+        land_poll_sweep(
+            spark, landing, [PollSpec("chat", "help", 1)],
+            lambda spec, body=chat_html(poll): (200, body),
+            fetch_ts=T0 + timedelta(seconds=n),
+        )
+        q = chat_pipeline_streaming(spark, landing, messages, docs, checkpoint_dir=ckpt)
+        q.awaitTermination(120)
+        q.stop()
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == cached_before
+    assert sorted(r["id"] for r in messages.read().collect()) == ["1", "2"]
+    doc_rows = {r["id"]: r for r in docs.read().collect()}
+    assert doc_rows["1"]["deleted"] is True and doc_rows["1"]["deleted_ts"] is not None
+    assert doc_rows["2"]["mentions"] == "alice"
