@@ -146,7 +146,10 @@ def main() -> None:
         t1 = time.time()
         n = parsed_rows(parse_payloads(pdf, "chat")).count()
         out["parse_msgs_per_sec"] = round(n / (time.time() - t1))
-
+    else:
+        # null, not absent: a missing fixture must show in the artifact
+        out["parse_msgs_per_sec"] = None
+        print(f"parse_msgs_per_sec: no fixture at {fixture}", file=sys.stderr)
 
     # round-2 operator additions, timed the same way but reported
     # separately so the headline total stays comparable across rounds

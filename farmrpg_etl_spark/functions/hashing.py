@@ -120,11 +120,6 @@ def salted_md5(col: Column, salt: int) -> Column:
     return F.md5(F.concat(F.lit(f"{salt}|"), col).cast("binary"))
 
 
-def _salted_hasher(salt: int):
-    """Factory → one-parameter lambda (see module NOTE on arity)."""
-    return lambda s: salted_md5(s, salt)
-
-
 # Universal-hash family parameters for minhash: h_i(x) = (A[i]*x1 +
 # B[i]*x2 + C[i]) mod 2^31, where (x1, x2) are two 32-bit words of
 # md5(x). Multipliers are LARGE md5-derived odd constants (< 2^28):

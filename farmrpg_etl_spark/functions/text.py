@@ -102,14 +102,6 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
-def _tokens(text_col: Column) -> Column:
-    """Lowercased whitespace tokens, empties removed (portable: the
-    DuckDB oracle tokenizes identically with string_split_regex)."""
-    return F.filter(
-        F.split(F.lower(F.trim(text_col)), r"\s+"), lambda t: F.length(t) > 0
-    )
-
-
 def _marker_padded(text_col: Column) -> Column:
     """Whitespace-normalized form for marker counting: lowercase, every
     whitespace run replaced by TWO spaces, and a leading/trailing space.
@@ -374,18 +366,6 @@ def stopword_ratio(text_col: Column, lang: str = "en") -> Column:
     return F.when(tokens == 0, F.lit(0.0)).otherwise(
         hits.cast("double") / tokens.cast("double")
     )
-
-
-def quality_score(text_col: Column) -> Column:
-    """Composite quality score in [0,1]: length band + low punctuation +
-    stopword presence. Deterministic, rounded to 6 decimals."""
-    n = F.length(text_col)
-    len_score = F.when((n >= 100) & (n <= 4000), F.lit(1.0)).otherwise(
-        F.when(n < 100, n.cast("double") / 100.0).otherwise(F.lit(4000.0) / n.cast("double"))
-    )
-    punct_score = 1.0 - F.least(punct_ratio(text_col) * 5.0, F.lit(1.0))
-    stop_score = F.least(stopword_ratio(text_col) * 10.0, F.lit(1.0))
-    return F.round((len_score * 0.5 + punct_score * 0.25 + stop_score * 0.25), 6)
 
 
 def fingerprint(text_col: Column) -> Column:

@@ -58,7 +58,3 @@ def unit(a: Column, norm_col: Column) -> Column:
     return F.when(norm_col == F.lit(0.0), a).otherwise(
         F.transform(a, lambda x: x / norm_col)
     )
-
-
-def cosine_rounded(a: Column, b: Column, digits: int = 6) -> Column:
-    return F.round(cosine(as_double(a), as_double(b)), digits)

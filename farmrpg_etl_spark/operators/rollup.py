@@ -14,21 +14,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def grouped_agg(df: DataFrame, keys: Sequence[str], aggs: dict[str, F.Column]) -> DataFrame:
-    return df.groupBy(*keys).agg(*[c.alias(n) for n, c in aggs.items()])
-
-
-def topk_by(
-    df: DataFrame, keys: Sequence[str], metric: F.Column, k: int, metric_name: str = "metric"
-) -> DataFrame:
-    return (
-        df.groupBy(*keys)
-        .agg(metric.alias(metric_name))
-        .orderBy(F.col(metric_name).desc(), *[F.col(c).asc() for c in keys])
-        .limit(k)
-    )
-
-
 def running_total(
     df: DataFrame, keys: Sequence[str], order_col: str, value_col: str, out_col: str
 ) -> DataFrame:

@@ -81,6 +81,41 @@ def _await_stream(q, timeout: int = 300) -> None:
             "its sink would be partial"
         )
 
+
+def _replay_stream(
+    spark: SparkSession,
+    rows: DataFrame,
+    split_col: str,
+    name: str,
+    on_batch: Callable[[DataFrame, int], None],
+) -> None:
+    """Deliver ``rows`` to ``on_batch`` as four file-stream micro-batches.
+
+    The arrival model of every streaming twin: the rows land in
+    ``scratch_dir(name)`` as four single-file appends, append ``i``
+    holding the rows with ``split_col % 4 == i``; a file stream reads
+    them back one file per trigger, so ``on_batch(batch_df, batch_id)``
+    runs once per append, in append order, through ``foreachBatch``
+    with ``availableNow``. The stream declares ``rows.schema`` (the
+    file source makes every field nullable, as inference would), so no
+    schema-inference job runs. A raising ``on_batch`` fails the query,
+    and ``_await_stream`` re-raises it."""
+    src_dir = scratch_dir(name)
+    for i in range(4):
+        rows.filter(F.col(split_col) % 4 == i).coalesce(1).write.mode(
+            "append"
+        ).parquet(src_dir)
+    q = (
+        spark.readStream.schema(rows.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+        .writeStream.foreachBatch(on_batch)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await_stream(q)
+
 # --------------------------------------------------------------------------
 # TPC-H-shaped relational core (scan → filter → join → agg → window)
 # --------------------------------------------------------------------------
@@ -2720,18 +2755,6 @@ def streaming_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src_dir = scratch_dir("ing")
-    n_batches = 4
-    for i in range(n_batches):
-        d.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     index = ParquetTable(spark, scratch_dir("sigidx"))
     pairs_tbl = ParquetTable(spark, scratch_dir("pairs"))
 
@@ -2756,13 +2779,7 @@ def streaming_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             index._commit(new_index, batch_id, "sigs")
         new_index.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
+    _replay_stream(spark, d, "doc_id", "ing", ingest)
     out = pairs_tbl.read()
     return out.select("id_a", "id_b", "jaccard")
 
@@ -2785,12 +2802,6 @@ def streaming_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    src_dir = scratch_dir("pqing")
-    n_batches = 4
-    for i in range(n_batches):
-        e.filter(F.col("vec_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
 
     def unitized(df: DataFrame) -> DataFrame:
         return similarity._unitize(
@@ -2808,13 +2819,6 @@ def streaming_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     index_tbl = ParquetTable(spark, scratch_dir("pqidx"))
 
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         cb = cb_tbl.read()
         codes = similarity.pq_seed_encode(
@@ -2824,13 +2828,7 @@ def streaming_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             index_tbl, codes, ["vec_id"], batch_id=batch_id, writer="pqidx"
         )
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
+    _replay_stream(spark, e, "vec_id", "pqing", ingest)
     return index_tbl.read().select(
         "vec_id", *[f"c{s}" for s in range(8)]
     )
@@ -2958,18 +2956,6 @@ def streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + F.lit(1_000_001)).alias("doc_id"), "text"
         )
     )
-    src_dir = scratch_dir("cing")
-    n_batches = 4
-    for i in range(n_batches):
-        d.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     corpus = ParquetTable(spark, scratch_dir("corp"))
     digest = F.md5(
         F.regexp_replace(
@@ -2991,13 +2977,7 @@ def streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             corpus, rows, ["digest"], batch_id=batch_id, writer="corpus"
         )
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
+    _replay_stream(spark, d, "doc_id", "cing", ingest)
     return corpus.read().select("doc_id", "quality")
 
 
@@ -6797,18 +6777,6 @@ def streaming_ppl_filter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     lm = LM.train_bigram_lm(
         docs.filter(F.col("doc_id") % 2 == 0), "text", "doc_id"
     ).persist()
-    src_dir = scratch_dir("ppl")
-    n_batches = 4
-    for i in range(n_batches):
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     sink = ParquetTable(spark, _sink_scratch("pplsink"))
 
     def score(batch_df: DataFrame, batch_id: int) -> None:
@@ -6817,13 +6785,7 @@ def streaming_ppl_filter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         insert_if_absent(sink, out, ["doc_id"], batch_id=batch_id, writer="ppl")
 
-    q = (
-        stream.writeStream.foreachBatch(score)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
+    _replay_stream(spark, docs, "doc_id", "ppl", score)
     lm.unpersist()
     return sink.read()
 
@@ -6859,18 +6821,6 @@ def streaming_kn5_filter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.filter(F.col("doc_id") % 2 == 0), "text", "doc_id", order=5
         )
     )
-    src_dir = scratch_dir("kn5")
-    n_batches = 4
-    for i in range(n_batches):
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     sink = ParquetTable(spark, _sink_scratch("kn5sink"))
 
     def score(batch_df: DataFrame, batch_id: int) -> None:
@@ -6882,13 +6832,7 @@ def streaming_kn5_filter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             sink, out, ["doc_id"], batch_id=batch_id, writer="kn5ppl"
         )
 
-    q = (
-        stream.writeStream.foreachBatch(score)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
+    _replay_stream(spark, docs, "doc_id", "kn5", score)
     LM.unpersist_kn_tables(tables)
     return sink.read()
 
@@ -7456,18 +7400,6 @@ def streaming_ccnet_per_lang_docs(
     # silently fork from ccnet_per_lang_filter and surface as a
     # cross-engine mismatch)
     thr = F.broadcast(LM.ccnet_thresholds(nll_full, "lang"))
-    src_dir = scratch_dir("ccnets")
-    n_batches = 4
-    for i in range(n_batches):
-        d.select("doc_id", "text").filter(
-            F.col("doc_id") % n_batches == i
-        ).coalesce(1).write.mode("append").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     sink = ParquetTable(spark, _sink_scratch("ccnetssink"))
 
     def score(batch_df: DataFrame, batch_id: int) -> None:
@@ -7484,13 +7416,9 @@ def streaming_ccnet_per_lang_docs(
             sink, out, ["doc_id"], batch_id=batch_id, writer="ccnets"
         )
 
-    q = (
-        stream.writeStream.foreachBatch(score)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    _replay_stream(
+        spark, d.select("doc_id", "text"), "doc_id", "ccnets", score
     )
-    _await_stream(q)
     LM.unpersist_kn_tables(tables)
     lang_rel.unpersist()
     return sink.read()
@@ -7598,18 +7526,6 @@ def streaming_pipeline_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    src_dir = scratch_dir("v6s")
-    n_batches = 4
-    for i in range(n_batches):
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     sink = ParquetTable(spark, _sink_scratch("v6ssink"))
 
     def proc(batch_df: DataFrame, batch_id: int) -> None:
@@ -7622,13 +7538,7 @@ def streaming_pipeline_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
             sink, out, ["doc_id"], batch_id=batch_id, writer="v6stream"
         )
 
-    q = (
-        stream.writeStream.foreachBatch(proc)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
+    _replay_stream(spark, docs, "doc_id", "v6s", proc)
     return sink.read()
 
 
@@ -7799,20 +7709,6 @@ def streaming_pipeline_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "source"
     )
     fz = _v7_frozen_globals(spark, docs)
-    rules, boiler, eval_grams = fz["rules"], fz["boiler"], fz["eval_grams"]
-    tables, thr = fz["tables"], fz["thr"]
-    src_dir = scratch_dir("v7s")
-    n_batches = 4
-    for i in range(n_batches):
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     sink = ParquetTable(spark, _sink_scratch("v7ssink"))
 
     def proc(batch_df: DataFrame, batch_id: int) -> None:
@@ -7821,16 +7717,10 @@ def streaming_pipeline_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
             sink, out, ["doc_id"], batch_id=batch_id, writer="v7stream"
         )
 
-    q = (
-        stream.writeStream.foreachBatch(proc)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
+    _replay_stream(spark, docs, "doc_id", "v7s", proc)
     from farmrpg_etl_spark.operators import langmodel as LM
 
-    LM.unpersist_kn_tables(tables)
+    LM.unpersist_kn_tables(fz["tables"])
     return sink.read()
 
 
@@ -8042,18 +7932,6 @@ def streaming_pipeline_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fz = _v7_frozen_globals(spark, docs)
     _, _, ratio, keep = _v8_frozen_selection(docs, fz)
-    src_dir = scratch_dir("v8s")
-    n_batches = 4
-    for i in range(n_batches):
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     sink = ParquetTable(spark, _sink_scratch("v8ssink"))
 
     def proc(batch_df: DataFrame, batch_id: int) -> None:
@@ -8074,13 +7952,7 @@ def streaming_pipeline_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
             sink, out, ["doc_id"], batch_id=batch_id, writer="v8stream"
         )
 
-    q = (
-        stream.writeStream.foreachBatch(proc)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
+    _replay_stream(spark, docs, "doc_id", "v8s", proc)
     from farmrpg_etl_spark.operators import langmodel as LM
 
     LM.unpersist_kn_tables(fz["tables"])
@@ -8337,18 +8209,6 @@ def streaming_leakage_splits_docs(
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     clusters = _frozen_doc_clusters(docs).localCheckpoint()
-    src_dir = scratch_dir("splits_s")
-    n_batches = 4
-    for i in range(n_batches):
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     sink = ParquetTable(spark, _sink_scratch("splitssink"))
 
     def proc(batch_df: DataFrame, batch_id: int) -> None:
@@ -8357,13 +8217,7 @@ def streaming_leakage_splits_docs(
             sink, out, ["doc_id"], batch_id=batch_id, writer="splitstream"
         )
 
-    q = (
-        stream.writeStream.foreachBatch(proc)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
+    _replay_stream(spark, docs, "doc_id", "splits_s", proc)
     return sink.read()
 
 
@@ -8504,18 +8358,6 @@ def streaming_logit_filter_docs(
     # VERDICT #7 — the hashed twin already froze its final weights)
     final = final.localCheckpoint()
 
-    src_dir = scratch_dir("logit_s")
-    n_batches = 4
-    for i in range(n_batches):
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     sink = ParquetTable(spark, _sink_scratch("logitsink"))
 
     def proc(batch_df: DataFrame, batch_id: int) -> None:
@@ -8526,13 +8368,7 @@ def streaming_logit_filter_docs(
             sink, out, ["doc_id"], batch_id=batch_id, writer="logitstream"
         )
 
-    q = (
-        stream.writeStream.foreachBatch(proc)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
+    _replay_stream(spark, docs, "doc_id", "logit_s", proc)
     return sink.read()
 
 
@@ -8629,18 +8465,6 @@ def streaming_logit_hashed_filter_docs(
     final = final.localCheckpoint()
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    src_dir = scratch_dir("hlogit_s")
-    n_batches = 4
-    for i in range(n_batches):
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     sink = ParquetTable(spark, _sink_scratch("hlogitsink"))
 
     def proc(batch_df: DataFrame, batch_id: int) -> None:
@@ -8651,13 +8475,7 @@ def streaming_logit_hashed_filter_docs(
             sink, out, ["doc_id"], batch_id=batch_id, writer="hlogitstream"
         )
 
-    q = (
-        stream.writeStream.foreachBatch(proc)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
+    _replay_stream(spark, docs, "doc_id", "hlogit_s", proc)
     return sink.read()
 
 
@@ -8705,18 +8523,6 @@ def streaming_pipeline_v9(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     schedule = _v9_pack_tail(docs, selected, splits).localCheckpoint()
 
-    src_dir = scratch_dir("v9s")
-    n_batches = 4
-    for i in range(n_batches):
-        docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     sink = ParquetTable(spark, _sink_scratch("v9ssink"))
 
     def proc(batch_df: DataFrame, batch_id: int) -> None:
@@ -8733,13 +8539,7 @@ def streaming_pipeline_v9(spark: SparkSession, sf_dir: str) -> DataFrame:
             writer="v9stream",
         )
 
-    q = (
-        stream.writeStream.foreachBatch(proc)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(q)
+    _replay_stream(spark, docs, "doc_id", "v9s", proc)
     from farmrpg_etl_spark.operators import langmodel as LM
 
     LM.unpersist_kn_tables(fz["tables"])

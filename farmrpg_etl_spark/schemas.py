@@ -11,15 +11,6 @@ declared StructType; nothing is ever inferred.
 
 from __future__ import annotations
 
-import re
-
-
-def camel_to_snake(name: str) -> str:
-    """Table-naming convention (reference db/core/models.py:21,177
-    derives SQL table names from class names): 'UserSnapshot' →
-    'user_snapshot'. Engine-side convention, not a data op."""
-    return re.sub(r"(?<=[a-z0-9])([A-Z])", r"_\1", name).lower()
-
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -117,20 +108,6 @@ ONLINE_PRESENCE = StructType(
         StructField("kind", StringType(), False),  # online | staff
     ]
 )
-
-# --- parse-stage output envelope (P9 strict-parse error channel) --------
-# Reference raises ParseError and the task wrapper swallows+logs
-# (scrapers/errors.py:1-2, tasks.py:28-34). In the engine, bad rows go
-# to a quarantine sink instead of killing the stream.
-def with_error_channel(payload: StructType) -> StructType:
-    return StructType(
-        [
-            StructField("ok", BooleanType(), False),
-            StructField("error", StringType(), True),
-            StructField("row", payload, True),
-        ]
-    )
-
 
 # --- multimodal: opaque binary + typed metadata --------------------------
 MEDIA = StructType(

@@ -12,6 +12,8 @@ append).
 Storage: a versioned parquet table (`ParquetTable`) — a directory of
 immutable version snapshots plus a pointer file, giving atomic
 replace-on-commit and replay safety without external dependencies.
+Each version records the replay guard (the last batch id per writer)
+beside its data, so one pointer swap publishes both.
 Versions share unchanged data files by hard link: the append-shaped
 writers (``insert_if_absent``, ``append_snapshots_with_noop_elimination``)
 write only their new rows, as one file, and link the current version's
@@ -43,11 +45,18 @@ from pyspark.sql.types import StructType
 class ParquetTable:
     """Tiny versioned parquet table with atomic pointer commits.
 
-    Each version ``v<n>`` is a directory of parquet files plus a
-    ``_SCHEMA`` file holding the version's schema (Spark's reader skips
-    ``_``-prefixed files). A version may hard-link data files of the
-    version before it, so unchanged rows are never rewritten; deleting
-    an old version removes only its links."""
+    Each version ``v<n>`` is a directory of parquet files plus two
+    metadata files (Spark's reader skips ``_``-prefixed files):
+    ``_SCHEMA`` holds the version's schema, and ``_BATCHES`` maps each
+    writer to the last batch id committed into this version or an
+    earlier one. Both are written before the ``_CURRENT`` pointer swap,
+    so a crash leaves either the old version and its guard or the new
+    version and its guard, never new data under an old guard. Versions
+    written before ``_BATCHES`` existed fall back to the per-writer
+    ``_LAST_BATCH_<writer>`` marker files of the table directory. A
+    version may hard-link data files of the version before it, so
+    unchanged rows are never rewritten; deleting an old version removes
+    only its links."""
 
     def __init__(self, spark: SparkSession, path: str, keep_versions: int = 2):
         # keep_versions: retention window for time travel / change
@@ -92,11 +101,22 @@ class ParquetTable:
         return self.spark.read.schema(schema).parquet(vdir)
 
     def last_batch_id(self, writer: str = "default") -> int:
+        return self._batches(self.current_version()).get(writer, -1)
+
+    def _batches(self, v: int) -> dict[str, int]:
+        """Version ``v``'s per-writer batch ids; versions written
+        before ``_BATCHES`` existed fall back to the marker files."""
         try:
-            with open(os.path.join(self.path, f"_LAST_BATCH_{writer}")) as f:
-                return int(f.read().strip())
+            with open(os.path.join(self.path, f"v{v}", "_BATCHES")) as f:
+                return json.load(f)
         except FileNotFoundError:
-            return -1
+            pass
+        batches = {}
+        for name in os.listdir(self.path):
+            if name.startswith("_LAST_BATCH_"):
+                with open(os.path.join(self.path, name)) as f:
+                    batches[name[len("_LAST_BATCH_"):]] = int(f.read().strip())
+        return batches
 
     def _commit(
         self,
@@ -111,12 +131,15 @@ class ParquetTable:
         in beside it, so an append costs its own rows only. ``df`` must
         then have the table's columns and types (a differing type raises
         ``ValueError``, as in ``upsert``). The pointer swap stays the
-        commit point either way."""
+        commit point either way, for the data and for ``batch_id``."""
         cur = self.read() if carry else None
         if cur is not None:
             df = _conformed(df, cur)
         df = self._enforced(df)
         v = self.current_version() + 1
+        batches = self._batches(v - 1)
+        if batch_id is not None:
+            batches[writer] = batch_id
         out = os.path.join(self.path, f"v{v}")
         (df.coalesce(1) if carry else df).write.mode("overwrite").parquet(out)
         if cur is not None:
@@ -126,13 +149,12 @@ class ParquetTable:
                     os.link(os.path.join(prev, name), os.path.join(out, name))
         with open(os.path.join(out, "_SCHEMA"), "w") as f:
             f.write(df.schema.json())
+        with open(os.path.join(out, "_BATCHES"), "w") as f:
+            json.dump(batches, f)
         tmp = self._pointer + ".tmp"
         with open(tmp, "w") as f:
             f.write(str(v))
         os.replace(tmp, self._pointer)  # atomic pointer swap
-        if batch_id is not None:
-            with open(os.path.join(self.path, f"_LAST_BATCH_{writer}"), "w") as f:
-                f.write(str(batch_id))
         old = os.path.join(self.path, f"v{v - self.keep_versions}")
         if os.path.isdir(old):
             shutil.rmtree(old, ignore_errors=True)

@@ -4,9 +4,10 @@ The reference polls game HTTP endpoints on fixed intervals
 (__main__.py:55-69) inside one asyncio process. The Spark-first shape
 is two-tier: a thin fetcher lands raw ``(source, key, fetch_ts,
 status, body)`` rows into a partitioned landing zone, and the engine
-consumes that zone — batch (``read_landing``) or streaming
-(``read_landing_stream``), with the reference's intervals becoming
-stream triggers. Executors never call ``datetime.now()``: ``fetch_ts``
+consumes that zone — batch (``read_landing``) or streaming (the
+``plans/topology.py`` pipelines open a file stream over it with
+``PAYLOAD_SCHEMA``), with the reference's intervals becoming stream
+triggers. Executors never call ``datetime.now()``: ``fetch_ts``
 is captured once per poll by the fetcher (clock discipline, SURVEY §7).
 
 HTTP itself is STUBBED here (no network in this environment; a real
@@ -90,17 +91,6 @@ def land_poll_sweep(
 
 def read_landing(spark: SparkSession, landing_dir: str) -> DataFrame:
     return spark.read.schema(PAYLOAD_SCHEMA).parquet(landing_dir)
-
-
-def read_landing_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
-    """S1-S3/S5/S6 streaming form: file-stream over the landing zone.
-    Poll intervals become the consumer's trigger;
-    ``maxFilesPerTrigger`` bounds batch size (the reference's pacing)."""
-    return (
-        spark.readStream.schema(PAYLOAD_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(landing_dir)
-    )
 
 
 def demand_fanout(

@@ -1,12 +1,13 @@
-"""r18 optimization profiling harness.
+"""Optimization profiling harness.
 
 Times registry queries exactly as bench.py does (noop sink, warm run
 then min-of-2 steady) and captures ``explain('formatted')`` for each
-into plans/r18/<name>_<tag>.txt.
+into plans/<name>_<tag>.txt. Put the round and the side of the change
+in the tag, e.g. ``--tag r19_before``.
 
 Usage:
-    SPARK_GRAFT_CPUS=32 python scripts/profile_r18.py --tag before q1_pricing_summary ...
-    python scripts/profile_r18.py --tag before --no-plan <names...>   # time only
+    SPARK_GRAFT_CPUS=32 python scripts/profile.py --tag r19_before q1_pricing_summary ...
+    python scripts/profile.py --tag r19_before --no-plan <names...>   # time only
 """
 
 from __future__ import annotations
@@ -34,10 +35,10 @@ def main() -> None:
     from farmrpg_etl_spark.queries import QUERIES
     from farmrpg_etl_spark.session import get_spark
 
-    spark = get_spark("profile-r18")
+    spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
 
-    plans_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r18")
+    plans_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans")
     os.makedirs(plans_dir, exist_ok=True)
 
     def run(name: str) -> None:

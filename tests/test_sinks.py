@@ -754,6 +754,65 @@ def test_crash_before_pointer_swap_keeps_old_version(spark, tmp_path, monkeypatc
     assert sorted(r.id for r in t.read().collect()) == ["m1", "m3"]
 
 
+def test_crash_after_pointer_swap_does_not_reapply_a_redelivered_batch(
+    spark, tmp_path, monkeypatch
+):
+    """The replay guard is published by the same pointer swap as the
+    data: a crash right after the swap must not let a redelivered batch
+    re-apply (an additive merge would double-count it)."""
+    import os
+
+    import pytest
+
+    from farmrpg_etl_spark.sinks import writers
+    from farmrpg_etl_spark.sinks.writers import merge_additive_aggregates
+
+    t = ParquetTable(spark, str(tmp_path / "rollup"))
+    schema = "key string, n long"
+    merge_additive_aggregates(
+        t, spark.createDataFrame([("a", 1)], schema), ["key"], batch_id=0
+    )
+    b1 = spark.createDataFrame([("a", 2), ("b", 5)], schema)
+    swap = os.replace
+
+    def swap_then_crash(src, dst):
+        swap(src, dst)
+        raise OSError("crash after the pointer swap")
+
+    with monkeypatch.context() as m:
+        m.setattr(writers.os, "replace", swap_then_crash)
+        with pytest.raises(OSError, match="after the pointer swap"):
+            merge_additive_aggregates(t, b1, ["key"], batch_id=1)
+    assert t.current_version() == 1 and t.last_batch_id() == 1
+    merge_additive_aggregates(t, b1, ["key"], batch_id=1)  # redelivery
+    assert t.current_version() == 1
+    assert {r.key: r.n for r in t.read().collect()} == {"a": 3, "b": 5}
+
+
+def test_last_batch_id_falls_back_to_marker_files(spark, tmp_path):
+    """A version written before ``_BATCHES`` existed keeps its guard in
+    the table directory's ``_LAST_BATCH_<writer>`` files."""
+    import os
+
+    t = ParquetTable(spark, str(tmp_path / "m"))
+    schema = "id string, content string"
+    insert_if_absent(
+        t, spark.createDataFrame([("m1", "a")], schema), ["id"], batch_id=3,
+        writer="w",
+    )
+    os.remove(os.path.join(_vdir(t, 0), "_BATCHES"))
+    with open(os.path.join(t.path, "_LAST_BATCH_w"), "w") as f:
+        f.write("2")
+    assert t.last_batch_id("w") == 2 and t.last_batch_id("other") == -1
+    # the next commit carries the marker's entries into its _BATCHES
+    insert_if_absent(
+        t, spark.createDataFrame([("m2", "b")], schema), ["id"], batch_id=0,
+        writer="other",
+    )
+    os.remove(os.path.join(t.path, "_LAST_BATCH_w"))
+    assert (t.last_batch_id("w"), t.last_batch_id("other")) == (2, 0)
+
+
 def test_append_rejects_type_drift(spark, tmp_path):
     import pytest
 

@@ -424,3 +424,46 @@ def test_chained_stateful_complete_at_one_and_two_flushes(spark):
             ).collect()
         }
         assert got == batch, f"flush={flush}"
+
+
+def test_replay_stream_delivers_four_batches_by_split_col(spark):
+    """The streaming twins' shared arrival model: four micro-batches,
+    batch ``i`` = the rows with ``split_col % 4 == i``, under the
+    frame's schema made nullable (what inferring the files would give)."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from farmrpg_etl_spark.queries import _replay_stream
+
+    schema = StructType([
+        StructField("doc_id", LongType(), False),
+        StructField("text", StringType(), False),
+    ])
+    rows = spark.createDataFrame([(i, f"t{i}") for i in range(8)], schema)
+    seen, schemas = {}, set()
+
+    def on_batch(batch_df, batch_id):
+        seen[batch_id] = sorted(r.doc_id for r in batch_df.collect())
+        schemas.add(batch_df.schema.json())
+
+    _replay_stream(spark, rows, "doc_id", "replay_test", on_batch)
+    assert seen == {i: [i, i + 4] for i in range(4)}
+    assert schemas == {StructType([
+        StructField("doc_id", LongType(), True),
+        StructField("text", StringType(), True),
+    ]).json()}
+
+
+def test_replay_stream_raises_when_a_batch_fails(spark):
+    from farmrpg_etl_spark.queries import _replay_stream
+
+    rows = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
+    seen = []
+
+    def on_batch(batch_df, batch_id):
+        seen.append(batch_id)
+        if batch_id == 1:
+            raise ValueError("batch 1 is bad")
+
+    with pytest.raises(Exception, match="batch 1 is bad"):
+        _replay_stream(spark, rows, "doc_id", "replay_test", on_batch)
+    assert seen == [0, 1]
