@@ -46,6 +46,136 @@ HEADLINE = [
 ]
 
 
+# extended set: every later round's operator additions, timed the same
+# way as the headline but reported separately so the headline total
+# stays comparable across rounds
+EXTENDED = [
+    "q19_disjunctive_revenue",
+    "q21_waiting_suppliers",
+    "decontaminate_docs",
+    "repetition_docs",
+    "pack_sequences_docs",
+    "hourly_rollup_events",
+    "ngram_jaccard_docs",
+    "simhash_docs",
+    "chunk_dedup_docs",
+    "token_budget_mixture_docs",
+    "ann_topk_quantized",
+    "training_data_pipeline",
+    "semantic_dedup_embeddings",
+    "fuzzy_decontaminate_docs",
+    "histogram_quantile_events",
+    # round-3 additions
+    "kmeans_lloyd_embeddings",
+    "decode_real_media_docs",
+    "incremental_lsh_docs",
+    "j1_resolve_join",
+    "heavy_hitter_tokens",
+    "semantic_dedup_lloyd",
+    # round-4 additions
+    "dup_span_docs",
+    "bm25_topk_docs",
+    # round-5 additions
+    "cut_dup_span_docs",
+    "bpe_merges_docs",
+    "ann_recall_ivf_tuned",
+    "pooled_semantic_dedup_embeddings",
+    # round-6 additions
+    "training_data_pipeline_v2",
+    "ann_topk_pq_rerank",
+    "ann_topk_ivfpq",
+    "hybrid_retrieval_docs",
+    # round-8/9 additions
+    "perplexity_docs",
+    "ppl_external_lm_docs",
+    "line_dedup_docs",
+    "url_canonicalize_docs",
+    "quality_logit_docs",
+    "training_data_pipeline_v3",
+    "funnel_events",
+    "cohort_retention_events",
+    "bloom_decontaminate_docs",
+    "pagerank_docs",
+    "char_entropy_docs",
+    "event_transitions_events",
+    "linear_attribution_events",
+    "gap_fill_events",
+    "k_partitioned_sink",
+    "record_linkage_customer",
+    "winsorize_events",
+    "dq_checks_events",
+    "dq_orphan_orders",
+    "anomaly_hours_events",
+    # round-10 additions
+    "bloom_bitmap_decontaminate_docs",
+    "lang_id_ngram_docs",
+    "c4_fineweb_filter_docs",
+    "k_sqldb_insert_absent",
+    # round-11 additions
+    "lang_id_script_docs",
+    "k_docstore_partial_sink",
+    "streaming_tws_first_seen",
+    # round-13 additions (kn5_ppl_filter subsumes the 5-gram
+    # train+score+bucket pipeline — the lm/perplexity rows would
+    # re-pay its training cost for the same timing signal, and the
+    # bench wall is already near the driver's capture window)
+    "kn5_ppl_filter_docs",
+    "crawl_robots_e2e_docs",
+    "hard_negatives_recall",
+    # round-14 additions (v7 subsumes ccnet_per_lang_filter_docs —
+    # it runs the identical keyed-KN stage over the gated
+    # survivors, so timing both would re-pay the same ~30 s
+    # training twice)
+    "unimax_mixture_docs",
+    "training_data_pipeline_v7",
+    "dsir_select_docs",
+    # round-15 additions (v8 = DSIR selection composed over v7's
+    # survivors)
+    "training_data_pipeline_v8",
+    # round-16 additions (v9 = the full build: v8's interior +
+    # clusters + schedule + packing, so corpus_report_v9_splits
+    # would re-pay the same ~20 s interior for no new signal;
+    # streaming_leakage_splits is its batch row + micro-batch
+    # plumbing, timed via the batch row's cluster stage)
+    "training_data_pipeline_v9",
+    "doremi_iterated_docs",
+    "leakage_safe_splits_docs",
+    # streaming_pipeline_v9 re-pays the identical frozen
+    # interior + schedule (timed via the batch v9 row); the
+    # trained classifier is its own new timing signal
+    "logit_train_docs",
+    # round-17 additions (token_id_packs subsumes bpe_encode —
+    # it runs the identical train+encode chain plus the pack
+    # regroup; the hashed filter/streaming twin re-pay the
+    # trainer for the same timing signal; v10 re-pays v9's
+    # interior but its BPE+pack tail is the new flagship stage)
+    "token_id_packs_docs",
+    "logit_train_hashed_docs",
+    "training_data_pipeline_v10",
+    "auth_lookup_users",
+]
+
+# The committed bench artifact that carries the per-row extended map.
+# The BENCH_r*.json driver records keep only the totals and name their
+# detail file; only BENCH_LOCAL.json of those is committed.
+PREVIOUS_BENCH = "BENCH_LOCAL.json"
+
+
+def _new_extended_rows() -> set:
+    """Rows of EXTENDED that PREVIOUS_BENCH did not time: they go into
+    ``extended_total_new_sec`` and stay out of
+    ``extended_total_inherited_sec``, so the inherited total is
+    directly diffable against the previous artifact. With no previous
+    artifact every row is new."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    try:
+        with open(os.path.join(here, PREVIOUS_BENCH)) as f:
+            prev = json.load(f).get("extended_queries", {})
+    except (OSError, ValueError):
+        prev = {}
+    return set(EXTENDED) - set(prev)
+
+
 def main() -> None:
     t_start = time.time()
 
@@ -151,130 +281,16 @@ def main() -> None:
         out["parse_msgs_per_sec"] = None
         print(f"parse_msgs_per_sec: no fixture at {fixture}", file=sys.stderr)
 
-    # round-2 operator additions, timed the same way but reported
-    # separately so the headline total stays comparable across rounds
     phase("parse throughput done; extended block start")
     extended = {}
-    # Rows ADDED to the extended list THIS round (r17 verdict #3 /
-    # r18 item 3: `extended_total_sec` mixed inherited rows with new
-    # additions each round, so round-over-round totals were not
-    # comparable — r16→r17 read as a 45% regression until ~57 s of
-    # new rows was subtracted by hand). The one-line JSON now also
-    # publishes `extended_total_inherited_sec` (rows present in the
-    # PREVIOUS round's bench — directly diffable) and
-    # `extended_total_new_sec`. Rounds that add rows must list them
-    # here and move them to the main list the round after.
-    EXTENDED_NEW_THIS_ROUND: set = set()  # r18 adds no extended rows
-    for name in [
-        "q19_disjunctive_revenue",
-        "q21_waiting_suppliers",
-        "decontaminate_docs",
-        "repetition_docs",
-        "pack_sequences_docs",
-        "hourly_rollup_events",
-        "ngram_jaccard_docs",
-        "simhash_docs",
-        "chunk_dedup_docs",
-        "token_budget_mixture_docs",
-        "ann_topk_quantized",
-        "training_data_pipeline",
-        "semantic_dedup_embeddings",
-        "fuzzy_decontaminate_docs",
-        "histogram_quantile_events",
-        # round-3 additions
-        "kmeans_lloyd_embeddings",
-        "decode_real_media_docs",
-        "incremental_lsh_docs",
-        "j1_resolve_join",
-        "heavy_hitter_tokens",
-        "semantic_dedup_lloyd",
-        # round-4 additions
-        "dup_span_docs",
-        "bm25_topk_docs",
-        # round-5 additions
-        "cut_dup_span_docs",
-        "bpe_merges_docs",
-        "ann_recall_ivf_tuned",
-        "pooled_semantic_dedup_embeddings",
-        # round-6 additions
-        "training_data_pipeline_v2",
-        "ann_topk_pq_rerank",
-        "ann_topk_ivfpq",
-        "hybrid_retrieval_docs",
-        # round-8/9 additions
-        "perplexity_docs",
-        "ppl_external_lm_docs",
-        "line_dedup_docs",
-        "url_canonicalize_docs",
-        "quality_logit_docs",
-        "training_data_pipeline_v3",
-        "funnel_events",
-        "cohort_retention_events",
-        "bloom_decontaminate_docs",
-        "pagerank_docs",
-        "char_entropy_docs",
-        "event_transitions_events",
-        "linear_attribution_events",
-        "gap_fill_events",
-        "k_partitioned_sink",
-        "record_linkage_customer",
-        "winsorize_events",
-        "dq_checks_events",
-        "dq_orphan_orders",
-        "anomaly_hours_events",
-        # round-10 additions
-        "bloom_bitmap_decontaminate_docs",
-        "lang_id_ngram_docs",
-        "c4_fineweb_filter_docs",
-        "training_data_pipeline_v4",
-        "k_sqldb_insert_absent",
-        # round-11 additions
-        "training_data_pipeline_v5",
-        "lang_id_script_docs",
-        "k_docstore_partial_sink",
-        "streaming_tws_first_seen",
-        # round-13 additions (kn5_ppl_filter subsumes the 5-gram
-        # train+score+bucket pipeline — the lm/perplexity rows would
-        # re-pay its training cost for the same timing signal, and the
-        # bench wall is already near the driver's capture window)
-        "kn5_ppl_filter_docs",
-        "crawl_robots_e2e_docs",
-        "hard_negatives_recall",
-        "training_data_pipeline_v6",
-        # round-14 additions (v7 subsumes ccnet_per_lang_filter_docs —
-        # it runs the identical keyed-KN stage over the gated
-        # survivors, so timing both would re-pay the same ~30 s
-        # training twice; streaming_pipeline_v6 is its own driver row)
-        "unimax_mixture_docs",
-        "training_data_pipeline_v7",
-        "dsir_select_docs",
-        # round-15 additions (v8 = DSIR selection composed over v7's
-        # survivors; corpus_report_v7_docs and streaming_pipeline_v7
-        # reuse the same interior+KN plans, so timing them separately
-        # would re-pay the identical ~15 s stage for no new signal)
-        "training_data_pipeline_v8",
-        # round-16 additions (v9 = the full build: v8's interior +
-        # clusters + schedule + packing, so corpus_report_v9_splits
-        # would re-pay the same ~20 s interior for no new signal;
-        # streaming_leakage_splits is its batch row + micro-batch
-        # plumbing, timed via the batch row's cluster stage)
-        "training_data_pipeline_v9",
-        "doremi_iterated_docs",
-        "leakage_safe_splits_docs",
-        # streaming_pipeline_v9 re-pays the identical frozen
-        # interior + schedule (timed via the batch v9 row); the
-        # trained classifier is its own new timing signal
-        "logit_train_docs",
-        # round-17 additions (token_id_packs subsumes bpe_encode —
-        # it runs the identical train+encode chain plus the pack
-        # regroup; the hashed filter/streaming twin re-pay the
-        # trainer for the same timing signal; v10 re-pays v9's
-        # interior but its BPE+pack tail is the new flagship stage)
-        "token_id_packs_docs",
-        "logit_train_hashed_docs",
-        "training_data_pipeline_v10",
-        "auth_lookup_users",
-    ]:
+    # `extended_total_sec` mixes inherited rows with each round's new
+    # additions, so round-over-round totals were not comparable
+    # (r16→r17 read as a 45% regression until ~57 s of new rows was
+    # subtracted by hand). The JSON also publishes
+    # `extended_total_inherited_sec` (rows PREVIOUS_BENCH timed —
+    # directly diffable) and `extended_total_new_sec`.
+    EXTENDED_NEW_THIS_ROUND = _new_extended_rows()
+    for name in EXTENDED:
         run(name)  # warm: compile + cache effects paid here
         # ONE timed steady pass (the headline block keeps min-of-2;
         # the extended list is 58 entries and 3 passes each pushed the
@@ -340,7 +356,7 @@ def main() -> None:
                     F.replace(F.col("text"), F.lit(" "), F.concat(F.lit(" "), kstr))
                 )
                 .alias("text"),
-                # carried for the URL-synthesis rows (pipeline_v5_10x)
+                # carried for the URL-synthesis rows (pipeline_v7_10x)
                 F.col("source"),
             )
             # 64 files: scan parallelism at any maxPartitionBytes (on a real
@@ -591,34 +607,6 @@ def main() -> None:
                 )
             return fn
 
-        def stretch_pipeline_v5():
-            # the crawl-front-half composition at 10x docs: robots gate
-            # (broadcast rules), page gate, survivor line dedup, holdout
-            # contamination census. The filter forces the contamination
-            # join, the lang expression tree AND the reassembly digest
-            # (a bare count() of the unique-key left join would let
-            # Catalyst elide all three and time only the dedup core).
-            from farmrpg_etl_spark.queries import QUERIES as _Q
-
-            return _Q["training_data_pipeline_v5"](spark, stretch_dir).filter(
-                (F.col("n_contaminated") > 0)
-                | (F.col("lang") != "xx")
-                | (F.col("out_digest") > "")
-            )
-
-        def stretch_pipeline_v6():
-            # v6 = v5 with the LIVE crawl gate (robots bodies over real
-            # HTTP, one GET per host — host count is unchanged at 10×,
-            # so the e2e-fidelity cost stays constant while the gated
-            # corpus scales). Same column-forcing filter as v5.
-            from farmrpg_etl_spark.queries import QUERIES as _Q
-
-            return _Q["training_data_pipeline_v6"](spark, stretch_dir).filter(
-                (F.col("n_contaminated") > 0)
-                | (F.col("lang") != "xx")
-                | (F.col("out_digest") > "")
-            )
-
         def stretch_kn5_filter():
             # the order-5 KN family's 10× point (r13 verdict #4): LM
             # training IS the cost — one corpus shuffle into top-order
@@ -677,8 +665,6 @@ def main() -> None:
             ("c4_filter_10x", stretch_c4_filter),
             ("pagerank_10x", stretch_pagerank),
             ("record_linkage_10x", stretch_linkage),
-            ("pipeline_v5_10x", stretch_pipeline_v5),
-            ("pipeline_v6_10x", stretch_pipeline_v6),
             ("kn5_filter_10x", stretch_kn5_filter),
             ("ccnet_per_lang_10x", stretch_ccnet_per_lang),
             ("ann_bruteforce_10x_arrow", stretch_ann("arrow")),
@@ -898,29 +884,15 @@ def main() -> None:
                     threshold=0.3, shingle_k=3,
                 )
 
-            def s100_v5():
-                # same column-forcing filter as the 10× point
-                return _Q["training_data_pipeline_v5"](spark, dir100).filter(
-                    (F.col("n_contaminated") > 0)
-                    | (F.col("lang") != "xx")
-                    | (F.col("out_digest") > "")
-                )
-
-            def s100_v6():
-                return _Q["training_data_pipeline_v6"](spark, dir100).filter(
-                    (F.col("n_contaminated") > 0)
-                    | (F.col("lang") != "xx")
-                    | (F.col("out_digest") > "")
-                )
-
             # r15 verdict #2: stretch points for the flagship
             # compositions. BOTH their 10x and 100x runs live in THIS
             # gated block (not the per-round sf1 list): v7/v8 embed
             # the complete per-language KN training — minutes per run
             # at sf1 — which the per-round driver window doesn't have.
-            # v7's filter forces the audit columns (same anti-elision
-            # rule as v5/v6); v8's forces the DSIR score columns (the
-            # top-50 count alone would be 50 regardless of values).
+            # v7's filter forces the audit columns (a bare count() of
+            # the unique-key joins would let Catalyst elide them);
+            # v8's forces the DSIR score columns (the top-50 count
+            # alone would be 50 regardless of values).
             def s_v7(d):
                 return lambda: _Q["training_data_pipeline_v7"](
                     spark, d
@@ -961,8 +933,6 @@ def main() -> None:
                 "ccnet_per_lang_100x": lambda: _Q[
                     "ccnet_per_lang_filter_docs"
                 ](spark, dir100),
-                "pipeline_v5_100x": s100_v5,
-                "pipeline_v6_100x": s100_v6,
                 "record_linkage_100x": lambda: _Q["record_linkage_customer"](
                     spark, dir100
                 ),

@@ -661,9 +661,9 @@ def pq_adc_rerank_topk(
     shortlist is re-scored with the exact cosine fold — the
     IVF-PQ + refine architecture every large-scale ANN deployment
     runs, because on high-dimensional near-uniform data ADC distances
-    concentrate and ADC-only top-k is near-zero recall (measured:
-    ``ann_recall_pq`` ≈ 0.0 on this corpus — the documented geometry,
-    not a bug), while shortlist→rescore at 10 % of the corpus measures
+    concentrate and ADC-only top-k is near-zero recall (measured 0.00
+    on this corpus — the geometry docs/SCALE.md records, not a bug),
+    while shortlist→rescore at 10 % of the corpus measures
     recall@5 = 0.86 (sf0.1), on par with the tuned IVF row.
 
     Scale shape: the index payload is m·log2(ks) bits/vector (2 bytes

@@ -1321,46 +1321,6 @@ FROM base b LEFT JOIN hit h ON b.query_id = h.query_id
 ORACLES["ann_recall_ivf_probe"] = _ann_recall_sql()
 
 
-def _matryoshka_sql() -> str:
-    """16-dim-prefix approximate side: slice BEFORE normalizing, own
-    norms, 16-term dot chains (same association as the Spark fold)."""
-    return f"""
-WITH e16 AS (SELECT vec_id, CAST(embedding AS DOUBLE[])[1:16] AS v
-             FROM embeddings),
-n16 AS (SELECT vec_id, v, sqrt({_sq('v', 16)}) AS nrm FROM e16),
-u16 AS (SELECT vec_id, CASE WHEN nrm = 0.0 THEN v
-        ELSE list_transform(v, x -> x / nrm) END AS v FROM n16),
-q AS (SELECT vec_id, v FROM u16 WHERE vec_id < 10),
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         round(({_dot('q.v', 'c.v', 16)}), 6) AS cosine
-  FROM u16 c, q WHERE c.vec_id <> q.vec_id
-)
-SELECT query_id, neighbor_id FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-) WHERE rank <= 5
-"""
-
-
-ORACLES["ann_recall_matryoshka"] = f"""
-WITH exact AS ({ORACLES["ann_topk_bruteforce"]}),
-approx AS ({_matryoshka_sql()}),
-hit AS (
-  SELECT e.query_id, COUNT(*) AS hits
-  FROM exact e JOIN approx a
-    ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-  GROUP BY e.query_id
-),
-base AS (SELECT query_id, COUNT(*) AS k_exact FROM exact GROUP BY query_id)
-SELECT b.query_id, b.k_exact,
-       CAST(COALESCE(h.hits, 0) AS BIGINT) AS hits,
-       round(COALESCE(h.hits, 0) / b.k_exact, 6) AS recall_at_k
-FROM base b LEFT JOIN hit h ON b.query_id = h.query_id
-"""
-
-
 def _pq_chain(vexpr: str, s: int, centroid: list[float], sub: int = 16) -> str:
     """Squared-L2 of subvector s against a literal centroid as an
     explicit left-associated chain — same association as the Spark
@@ -1684,22 +1644,6 @@ WHERE ina AND inb AND (at <> bt OR av <> bv)
 ORACLES["ann_recall_pq_rerank"] = f"""
 WITH exact AS ({ORACLES["ann_topk_bruteforce"]}),
 approx AS ({_pq_rerank_sql()}),
-hit AS (
-  SELECT e.query_id, COUNT(*) AS hits
-  FROM exact e JOIN approx a
-    ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-  GROUP BY e.query_id
-),
-base AS (SELECT query_id, COUNT(*) AS k_exact FROM exact GROUP BY query_id)
-SELECT b.query_id, b.k_exact,
-       CAST(COALESCE(h.hits, 0) AS BIGINT) AS hits,
-       round(COALESCE(h.hits, 0) / b.k_exact, 6) AS recall_at_k
-FROM base b LEFT JOIN hit h ON b.query_id = h.query_id
-"""
-
-ORACLES["ann_recall_pq"] = f"""
-WITH exact AS ({ORACLES["ann_topk_bruteforce"]}),
-approx AS ({_pq_adc_sql()}),
 hit AS (
   SELECT e.query_id, COUNT(*) AS hits
   FROM exact e JOIN approx a
@@ -5470,56 +5414,12 @@ SELECT doc_id,
 FROM m
 """
 
-# v4 pipeline: C4+Gopher page gate -> line dedup over SURVIVORS ->
-# census + reassembly digest + final token count. Frequency counting
-# runs over kept pages only, mirroring the Spark plan's gate-first
-# pruning.
-ORACLES["training_data_pipeline_v4"] = rf"""
-{_C4_PAGE_CTES},
-k AS (
-  SELECT doc_id, n_words FROM r
-  WHERE NOT has_lorem AND NOT has_brace AND NOT has_js
-    AND n_terminal_lines >= 3
-    AND n_words BETWEEN 50 AND 100000
-    AND mean_wlen_micros BETWEEN 3000000 AND 10000000
-    AND bullet_ratio_micros <= 900000
-    AND ellipsis_ratio_micros <= 300000
-    AND alpha_ratio_micros >= 800000
-    AND stop_hits >= 2
-),
-surv AS (SELECT s.doc_id, s.ls0 FROM st s JOIN k USING (doc_id)),
-l2 AS (
-  SELECT doc_id,
-         string_split(array_to_string(ls0, chr(10)), chr(10)) AS lsx
-  FROM surv
-),
-ii2 AS (SELECT doc_id, lsx, unnest(generate_series(1, len(lsx))) AS i FROM l2),
-lines2 AS (SELECT doc_id, i AS pos, lsx[i] AS line FROM ii2),
-freq2 AS (SELECT line FROM lines2 GROUP BY line HAVING count(*) >= 2),
-kept2 AS (
-  SELECT doc_id, pos, line FROM lines2
-  WHERE line NOT IN (SELECT line FROM freq2)
-),
-reagg AS (
-  SELECT doc_id, count(*) AS n_kept,
-         string_agg(line, chr(10) ORDER BY pos) AS text_out
-  FROM kept2 GROUP BY doc_id
-)
-SELECT l2.doc_id, k.n_words,
-       CAST(len(lsx) AS BIGINT) AS n_lines,
-       CAST(coalesce(n_kept, 0) AS BIGINT) AS n_kept,
-       md5(coalesce(text_out, '')) AS out_digest,
-       CAST(len(list_filter(string_split_regex(coalesce(text_out, ''),
-            '\s+'), w -> w <> '')) AS BIGINT) AS n_tok_out
-FROM l2 JOIN k USING (doc_id) LEFT JOIN reagg USING (doc_id)
-"""
-
-# v5: robots gate -> eval holdout -> page gate -> line dedup -> census
-# with lang tag (full script+trigram logic over text_out) and EXACT
-# distinct-13-gram contamination vs the holdout. The page CTEs are the
-# shared _C4_PAGE_CTES with the d source filtered to robots-allowed
-# non-holdout docs.
-_V5_PAGES = _C4_PAGE_CTES.replace(
+# The crawl interior after the robots gate `rb`: eval holdout -> page
+# gate -> line dedup -> census with lang tag (full script+trigram logic
+# over text_out) and EXACT distinct-13-gram contamination vs the
+# holdout. The page CTEs are the shared _C4_PAGE_CTES with the d
+# source filtered to robots-allowed non-holdout docs.
+_CRAWL_PAGES = _C4_PAGE_CTES.replace(
     "WITH d AS (SELECT doc_id, ", "d AS (SELECT doc_id, ", 1
 ).replace(
     "FROM documents),",
@@ -5527,14 +5427,14 @@ _V5_PAGES = _C4_PAGE_CTES.replace(
     1,
 )
 
-# v6: identical to v5 except the robots gate — rules now come from the
-# fake site's LIVE per-host bodies (sources/fakesite.py /robots.txt:
+# The live robots gate `rb`: rules come from the fake site's LIVE
+# per-host bodies (sources/fakesite.py /robots.txt:
 # hosts with n%3==0 publish only '* Disallow /Docs', so farmbot's
 # fallback denies every /Docs path; other hosts give farmbot
 # 'Disallow /Docs/{n}' with an Allow carve-out '/Docs/{n}/pub' that
 # only even doc_ids' paths enter) — so the gate reduces to the same
-# arithmetic the crawl_robots_e2e_docs oracle pins. The interior
-# (holdout -> page gate -> line dedup -> census) is shared verbatim.
+# arithmetic the crawl_robots_e2e_docs oracle pins. `_V6_SQL` = this
+# gate + the crawl interior, the body the v7-v10 oracles extend.
 _V6_RB = r"""
 WITH d0 AS (
   SELECT doc_id,
@@ -5544,39 +5444,7 @@ WITH d0 AS (
 rb AS (SELECT doc_id FROM d0 WHERE n % 3 <> 0 AND doc_id % 2 = 0),
 """
 
-ORACLES["training_data_pipeline_v5"] = rf"""
-WITH rb_u AS (
-  SELECT doc_id,
-         source || '.example.com' AS host,
-         '/Docs/' || CAST(doc_id % 50 AS VARCHAR) AS path
-  FROM documents
-),
-rb_hosts AS (SELECT DISTINCT host FROM rb_u),
-rb_rules AS (
-  SELECT host, prefix, allow
-  FROM rb_hosts, (VALUES ('/Docs/1', FALSE), ('/Docs/12', TRUE),
-                         ('/Docs/3', FALSE), ('/Docs/3', TRUE))
-       AS t(prefix, allow)
-  UNION ALL
-  SELECT host, '/', FALSE FROM rb_hosts
-  WHERE regexp_matches(host, '^src[0-9]*0\.')
-),
-rb_cand AS (
-  SELECT rb_u.doc_id, r.prefix, r.allow
-  FROM rb_u JOIN rb_rules r
-    ON rb_u.host = r.host AND starts_with(rb_u.path, r.prefix)
-),
-rb_w AS (
-  SELECT doc_id,
-         max(struct_pack(l := length(prefix), a := allow)) AS wn
-  FROM rb_cand GROUP BY doc_id
-),
-rb AS (
-  SELECT rb_u.doc_id
-  FROM rb_u LEFT JOIN rb_w USING (doc_id)
-  WHERE coalesce(wn.a, TRUE)
-),
-{_V5_PAGES},
+_CRAWL_INTERIOR_SQL = rf"""{_CRAWL_PAGES},
 k AS (
   SELECT doc_id, n_words FROM r
   WHERE NOT has_lorem AND NOT has_brace AND NOT has_js
@@ -5669,19 +5537,17 @@ SELECT lg.doc_id, n_kept,
 FROM lg LEFT JOIN ct USING (doc_id)
 """
 
-ORACLES["training_data_pipeline_v6"] = _V6_RB + ORACLES[
-    "training_data_pipeline_v5"
-].split("WHERE coalesce(wn.a, TRUE)\n),\n", 1)[1]
+_V6_SQL = _V6_RB + _CRAWL_INTERIOR_SQL
 
 
-# v7 = v6 + the per-language CCNet perplexity cut as the FINAL gate:
-# the v6 body's closing SELECT becomes a `v7in` CTE (keeping text_out
+# v7 = `_V6_SQL` + the per-language CCNet perplexity cut as the FINAL
+# gate: the body's closing SELECT becomes a `v7in` CTE (keeping text_out
 # for tokenization), `langs`/`d` re-point the shared keyed-KN5 chain
 # at the interior's survivors, and the same self-calibrating
 # per-language thresholds cut the tail. Every CTE name inside the
 # keyed chain is fresh w.r.t. the v6 body (its doc CTE is `d0`/`st`,
 # the KN chain's is `d`/`ii`/`inst`/t*/den*).
-_v7_pre, _v7_sel = ORACLES["training_data_pipeline_v6"].split(
+_v7_pre, _v7_sel = _V6_SQL.split(
     "\nSELECT lg.doc_id, n_kept,\n       md5(text_out) AS out_digest,", 1
 )
 ORACLES["training_data_pipeline_v7"] = (
@@ -6535,12 +6401,6 @@ SELECT g.key AS event_type, g.hour, g.vm AS value_micros,
 FROM g JOIN m ON g.key = m.key
 """
 
-# streaming v6 == batch v6 by construction (frozen rules + frozen
-# frequent-line model + frozen holdout gram set; every other decision
-# is per-document) — the batch oracle IS the streaming oracle, which
-# pins batch/stream equality cross-engine.
-ORACLES["streaming_pipeline_v6"] = ORACLES["training_data_pipeline_v6"]
-
 # streaming per-lang CCNet == the batch row by construction (frozen
 # keyed models + frozen per-language thresholds; scoring the training
 # corpus never misses) — shared oracle pins stream/batch equality.
@@ -6652,16 +6512,11 @@ FROM scal CROSS JOIN tp CROSS JOIN ctm
 
 # --- round 15: v7 compositions -------------------------------------------
 
-# streaming v7 == batch v7 by construction (frozen v6 globals + frozen
-# per-lang KN models + frozen thresholds; every per-batch decision is
-# per-document) — the shared oracle pins stream ≡ batch cross-engine.
-ORACLES["streaming_pipeline_v7"] = ORACLES["training_data_pipeline_v7"]
-
 # The v7 head/middle survivor relation as a reusable CTE block: the
 # v7 oracle's prefix (everything up to its final SELECT) + a
 # materialized survivor CTE named v7out ("surv" is taken by the page
-# chain). Shared by the v8 (DSIR-selection) oracle and the
-# built-corpus report card, mirroring queries._v7_interior_scored.
+# chain). Shared by the v8 (DSIR-selection) oracle and, through it,
+# the v9 family, mirroring queries._v7_interior_scored.
 _v7_prefix = ORACLES["training_data_pipeline_v7"].split(
     "\nSELECT v7in.doc_id AS doc_id", 1
 )[0]
@@ -6744,36 +6599,6 @@ FROM ds_top JOIN v7out ON v7out.doc_id = ds_top.doc_id
 """
 )
 
-# Built-corpus report card: the corpus_report_docs card families over
-# the v7 survivors — token totals from the LM scorer's exact n_tok,
-# duplicates via out_digest fingerprints, language spread with the
-# (n, lang) struct-max tie-break, quality mass as the exact integer
-# perplexity micro-sum (nll is 4-decimal by construction), residual
-# contamination = survivors still sharing a 13-gram with the holdout.
-ORACLES["corpus_report_v7_docs"] = (
-    _V7OUT
-    + """,
-rc_scal AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
-         CAST(count(DISTINCT out_digest) AS BIGINT) AS n_fp,
-         CAST(SUM(CAST(round(nll * 10000.0) AS BIGINT)) AS BIGINT)
-           AS sum_nll_tenk,
-         CAST(SUM(CASE WHEN n_contaminated > 0 THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_contaminated_docs
-  FROM v7out),
-rc_lgc AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
-           FROM v7out GROUP BY lang),
-rc_tp AS (SELECT max(struct_pack(n := n, l := lang)) AS t,
-                 CAST(count(*) AS BIGINT) AS n_langs
-          FROM rc_lgc)
-SELECT n_docs, n_tokens, n_docs - n_fp AS n_dup_docs, n_langs,
-       t.l AS top_lang, CAST(t.n AS BIGINT) AS top_lang_n,
-       sum_nll_tenk, n_contaminated_docs
-FROM rc_scal CROSS JOIN rc_tp
-"""
-)
-
 # UniMax assembly: the unimax_mixture_docs oracle's quota CTE chain
 # (everything before its final SELECT) + the shared epoch-fill tail
 # (`_unimax_fill_chain`) — all exact integers.
@@ -6792,13 +6617,6 @@ ua_base AS (
 SELECT doc_id, source, n_tok, n_copies FROM ua_copies
 """
 )
-
-# streaming v8 == batch v8 by construction: on top of the v7 twin's
-# frozen globals, the DSIR log-ratio relation and the selection
-# cutoff (the batch top-50's smallest Gumbel key) freeze batch-side,
-# turning Gumbel-top-k into a stateless per-document threshold — the
-# shared oracle pins stream ≡ batch cross-engine.
-ORACLES["streaming_pipeline_v8"] = ORACLES["training_data_pipeline_v8"]
 
 # --- round 16: the full build artifact (v9) -------------------------------
 #
@@ -6905,8 +6723,10 @@ ORACLES["training_data_pipeline_v10"] = (
     )
 )
 
-# Split-aware report card over the v9 build: the corpus_report_v7
-# card families grouped per split — one row per split present.
+# Split-aware report card over the v9 build: the built-corpus card
+# families (doc/token totals, digest duplicates, language spread,
+# exact nll micro-sum, residual contamination) grouped per split —
+# one row per split present.
 ORACLES["corpus_report_v9_splits"] = (
     _V9_SPLITS
     + """,

@@ -1817,6 +1817,25 @@ def hard_negatives_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _recall_at_k(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """Per-query recall of an approximate top-k against the exact one,
+    both as (query_id, neighbor_id): (query_id, k_exact, hits,
+    recall_at_k), with a query that hits nothing kept at 0."""
+    hits = (
+        exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
+        .groupBy("query_id")
+        .agg(F.count(F.lit(1)).alias("hits"))
+    )
+    base = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("k_exact"))
+    n_hits = F.coalesce(F.col("hits"), F.lit(0))
+    return base.join(hits, "query_id", "left").select(
+        "query_id",
+        "k_exact",
+        n_hits.cast("long").alias("hits"),
+        F.round(n_hits / F.col("k_exact"), 6).alias("recall_at_k"),
+    )
+
+
 def hard_negatives_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall ledger for the IVF-blocked hard-negative miner (r12
     verdict: every approximate ANN path carries a measured-recall row;
@@ -1838,66 +1857,7 @@ def hard_negatives_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         blocked, blocked.filter(F.col("vec_id") < 10), "embedding",
         "vec_id", "label", k=5, block_col="block",
     ).select("query_id", "neighbor_id")
-    hits = exact.join(approx, ["query_id", "neighbor_id"]).groupBy(
-        "query_id"
-    ).agg(F.count(F.lit(1)).alias("hits"))
-    base = exact.groupBy("query_id").agg(
-        F.count(F.lit(1)).alias("k_exact")
-    )
-    return base.join(hits, "query_id", "left").select(
-        "query_id",
-        "k_exact",
-        F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-        F.round(
-            F.coalesce(F.col("hits"), F.lit(0)).cast("double")
-            / F.col("k_exact").cast("double"),
-            6,
-        ).alias("recall_at_k"),
-    )
-
-
-def ann_recall_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka-truncation recall: rank by cosine over the FIRST 16
-    of 64 dims (re-normalized) and measure recall@5 against the exact
-    64-dim top-5 — the measurement behind MRL-style embedding serving
-    ("how much recall does a 4x cheaper prefix buy?"). Truncation is a
-    pure projection (`slice`); both sides go through the same
-    brute-force operator, so the delta is the dimension cut alone. At
-    100 TB the truncated prefix IS the index (4x less scan bandwidth,
-    same layout); this row prices that trade instead of assuming it.
-
-    Measured on THIS corpus: mean recall@5 ≈ 0.08 — the honest
-    negative result: the synthetic embeddings spread signal uniformly
-    across dims, so a naive prefix keeps ~1/4 of the information and
-    the ranking collapses. MRL-trained embeddings concentrate signal
-    in the prefix BY TRAINING; this row is the measurement that tells
-    you whether your embeddings actually have that property before
-    you ship the 4x-cheaper index."""
-    e = load_table(spark, sf_dir, "embeddings")
-    t = e.withColumn("emb16", F.slice(F.col("embedding"), 1, 16))
-    exact = similarity.ann_topk_bruteforce(
-        e, e.filter(F.col("vec_id") < 10), "embedding", "vec_id", k=5,
-        impl="catalyst",
-    ).select("query_id", "neighbor_id")
-    approx = similarity.ann_topk_bruteforce(
-        t, t.filter(F.col("vec_id") < 10), "emb16", "vec_id", k=5,
-        impl="catalyst",
-    ).select("query_id", "neighbor_id", F.lit(1).alias("__hit"))
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("k_exact"),
-            F.count("__hit").cast("long").alias("hits"),
-        )
-        .select(
-            "query_id", "k_exact", "hits",
-            F.round(
-                F.col("hits").cast("double") / F.col("k_exact").cast("double"),
-                6,
-            ).alias("recall_at_k"),
-        )
-    )
+    return _recall_at_k(exact, approx)
 
 
 def pq_encode_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1921,37 +1881,14 @@ def ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.pq_adc_topk(e, q, "embedding", "vec_id", k=5)
 
 
-def ann_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of PQ-ADC against exact brute force — the honest-
-    accounting twin of ``ann_recall_ivf_probe``/``ann_recall_ivf_
-    tuned`` for the compressed path: PQ trades 256× index memory for
-    whatever THIS number says, and you size m/ks against it."""
-    exact = ann_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    approx = ann_topk_pq(spark, sf_dir).select("query_id", "neighbor_id")
-    hits = (
-        exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("hits"))
-    )
-    base = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("k_exact"))
-    return base.join(hits, "query_id", "left").select(
-        "query_id",
-        "k_exact",
-        F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-        F.round(
-            F.coalesce(F.col("hits"), F.lit(0)) / F.col("k_exact"), 6
-        ).alias("recall_at_k"),
-    )
-
-
 def ann_topk_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRODUCTION PQ retrieval (IVF-PQ + refine shape): ADC over
     data-seeded codebooks (8 subspaces × 16 seed centroids = the
     lowest-id corpus vectors, k-means round 0 as training stand-in)
     shortlists 200 candidates/query from the 2-byte-per-vector code
     index; only the shortlist is exactly re-scored. ADC-only top-k on
-    this near-uniform corpus is ~0 recall (``ann_recall_pq`` — the
-    distance-concentration geometry, documented there), which is
+    this near-uniform corpus measured 0.00 recall (the distance-
+    concentration geometry, recorded in docs/SCALE.md), which is
     exactly why deployed PQ always re-ranks; this row is the fixed
     architecture."""
     e = load_table(spark, sf_dir, "embeddings")
@@ -1968,20 +1905,7 @@ def ann_recall_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost dial is ``shortlist``; the honest ledger row for sizing it."""
     exact = ann_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
     approx = ann_topk_pq_rerank(spark, sf_dir).select("query_id", "neighbor_id")
-    hits = (
-        exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("hits"))
-    )
-    base = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("k_exact"))
-    return base.join(hits, "query_id", "left").select(
-        "query_id",
-        "k_exact",
-        F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-        F.round(
-            F.coalesce(F.col("hits"), F.lit(0)) / F.col("k_exact"), 6
-        ).alias("recall_at_k"),
-    )
+    return _recall_at_k(exact, approx)
 
 
 def _ivfpq_topk(
@@ -2137,20 +2061,7 @@ def ann_recall_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("query_id", "neighbor_id")
     )
     approx = ann_topk_ivfpq(spark, sf_dir).select("query_id", "neighbor_id")
-    hits = (
-        exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("hits"))
-    )
-    base = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("k_exact"))
-    return base.join(hits, "query_id", "left").select(
-        "query_id",
-        "k_exact",
-        F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-        F.round(
-            F.coalesce(F.col("hits"), F.lit(0)) / F.col("k_exact"), 6
-        ).alias("recall_at_k"),
-    )
+    return _recall_at_k(exact, approx)
 
 
 def ann_topk_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2168,23 +2079,7 @@ def ann_recall_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides in DuckDB."""
     exact = ann_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
     approx = ann_topk_ivf_probe(spark, sf_dir).select("query_id", "neighbor_id")
-    hits = (
-        exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("hits"))
-    )
-    base = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("k_exact"))
-    return (
-        base.join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            "k_exact",
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            F.round(
-                F.coalesce(F.col("hits"), F.lit(0)) / F.col("k_exact"), 6
-            ).alias("recall_at_k"),
-        )
-    )
+    return _recall_at_k(exact, approx)
 
 
 def ann_recall_ivf_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2283,24 +2178,12 @@ def ann_recall_ivf_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
         eraw, eraw.filter(F.col("vec_id") < 10), "embedding", "vec_id",
         k=10, impl="catalyst",
     ).select("query_id", "neighbor_id")
-    hits = (
-        exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("hits"))
-    )
-    base = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("k_exact"))
-    return (
-        base.join(hits, "query_id", "left")
-        .join(n_cand, "query_id", "left")
-        .select(
-            "query_id",
-            "k_exact",
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            F.round(
-                F.coalesce(F.col("hits"), F.lit(0)) / F.col("k_exact"), 6
-            ).alias("recall_at_k"),
-            F.coalesce(F.col("n_cand"), F.lit(0)).cast("long").alias("n_cand"),
-        )
+    return _recall_at_k(exact, approx).join(n_cand, "query_id", "left").select(
+        "query_id",
+        "k_exact",
+        "hits",
+        "recall_at_k",
+        F.coalesce(F.col("n_cand"), F.lit(0)).cast("long").alias("n_cand"),
     )
 
 
@@ -7089,7 +6972,7 @@ def crawl_robots_e2e_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     host = F.concat(F.col("source"), F.lit(".example.com"))
     hosts = docs.select(host.alias("key")).distinct()
     rules = _live_robots_rules(spark, hosts, "farmbot/1.0")
-    return robots_filter(_v6_urls(docs), rules).select(
+    return robots_filter(_crawl_urls(docs), rules).select(
         "doc_id", "matched_len", "allowed"
     )
 
@@ -7126,123 +7009,18 @@ def text_normalize_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def training_data_pipeline_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v4 recipe — the FineWeb ordering with this round's page gate in
-    front: structured crawl pages → C4 + Gopher heuristic page gate
-    (`c4_fineweb_signals`, one codegen pass) → corpus-wide line-level
-    dedup over the SURVIVORS (the planted even-doc stop sentence is
-    corpus-frequent boilerplate, so the very line that helped a page
-    pass the stop-word rule is then cut as chrome — the real C4→
-    RefinedWeb interplay) → per-document census, reassembly digest,
-    and final token count.
-
-    Plan shape: ``pages`` persists once and feeds the gate and the
-    dedup branch (branch-shared persist rule); frequency counting runs
-    over survivors only — the gate prunes BEFORE the line shuffle, so
-    the expensive corpus-wide group-by sees only kept pages (at 100 TB
-    the heuristic gate typically drops 30-60% of raw crawl before any
-    shuffle spend)."""
-    from farmrpg_etl_spark.operators.linededup import remove_frequent_lines
-    from farmrpg_etl_spark.operators.quality import c4_fineweb_signals
-
-    docs = load_table(spark, sf_dir, "documents")
-    pages = _docs_as_structured(docs).persist()
-    sig = c4_fineweb_signals(pages, "text_struct", "doc_id")
-    keep = sig.filter(F.col("keep_c4") & F.col("keep_gopher")).select(
-        "doc_id", "n_words"
-    )
-    survivors = pages.join(keep, "doc_id")
-    out = remove_frequent_lines(survivors, "text_struct", "doc_id", min_count=2)
-    toks_out = F.filter(
-        F.split(F.col("text_out"), r"\s+"), lambda t: F.length(t) > 0
-    )
-    return out.join(keep, "doc_id").select(
-        "doc_id",
-        "n_words",
-        F.col("n_lines").cast("long").alias("n_lines"),
-        "n_kept",
-        F.md5(F.col("text_out")).alias("out_digest"),
-        F.size(toks_out).cast("long").alias("n_tok_out"),
-    )
-
-
-def training_data_pipeline_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v5 recipe — the crawl-to-corpus FRONT HALF added ahead of the
-    v4 interior, composing this round's pieces end-to-end:
-
-    1. **Robots policy gate** (RFC 9309, `operators/crawl.py`): the
-       synthesized crawl URLs filter against per-host rules
-       (longest-match, allow-wins-ties, whole-host denies) BEFORE any
-       text processing — at 100 TB this is the cheapest prune in the
-       pipeline (a broadcast rules join over (host, path) pairs; the
-       page bodies aren't even touched).
-    2. **Eval holdout**: the ``doc_id % 101 == 0`` slice is reserved
-       as the evaluation set and excluded from training.
-    3. **C4/Gopher page gate** (`quality.c4_fineweb_signals`): the
-       zero-shuffle codegen pass, gate-first as in v4.
-    4. **Survivor-only line dedup** (`linededup.remove_frequent_lines`).
-    5. **Output census**: per surviving doc — kept-line count,
-       reassembly digest, `lang_id_script` tag of the deduped text,
-       and the EXACT distinct-13-gram contamination count against the
-       eval holdout (broadcast eval grams; the Bloom forms' shared
-       invariant — exact overlap — is what the oracle pins).
-
-    Plan shape: rules and eval grams broadcast; ``pages`` persists
-    once feeding gate + dedup; the line shuffle sees only
-    robots-allowed, gate-surviving, non-eval pages."""
-    from farmrpg_etl_spark.functions import urls as U
-    from farmrpg_etl_spark.operators.crawl import robots_denied_ids
-
-    docs = load_table(spark, sf_dir, "documents")
-    # 1. robots gate — same URL synthesis and rules as robots_filter_docs
-    url = F.concat(
-        F.lit("HTTPS://WWW."),
-        F.col("source"),
-        F.lit(".Example.COM:443/Docs/"),
-        (F.col("doc_id") % 50).cast("string"),
-        F.lit("/?utm_source=feed&sessionid="),
-        F.col("doc_id").cast("string"),
-    )
-    u = docs.select(
-        "doc_id",
-        U.url_host(url).alias("host"),
-        U.url_path(url).alias("path"),
-    )
-    hosts = u.select("host").distinct()
-    base = hosts.select(
-        "host",
-        F.explode(
-            F.array(
-                F.struct(F.lit("/Docs/1").alias("prefix"),
-                         F.lit(False).alias("allow")),
-                F.struct(F.lit("/Docs/12").alias("prefix"),
-                         F.lit(True).alias("allow")),
-                F.struct(F.lit("/Docs/3").alias("prefix"),
-                         F.lit(False).alias("allow")),
-                F.struct(F.lit("/Docs/3").alias("prefix"),
-                         F.lit(True).alias("allow")),
-            )
-        ).alias("r"),
-    ).select("host", F.col("r.prefix").alias("prefix"),
-             F.col("r.allow").alias("allow"))
-    whole_host = hosts.filter(F.col("host").rlike(r"^src\d*0\.")).select(
-        "host", F.lit("/").alias("prefix"), F.lit(False).alias("allow")
-    )
-    denied = robots_denied_ids(u, base.unionByName(whole_host))
-    return _crawl_corpus_interior(docs, denied)
-
-
 def _crawl_survivors(
     docs: DataFrame, denied: DataFrame, materialize: bool = True
 ) -> DataFrame:
     """Gate → eval-holdout → C4/Gopher page gate → surviving pages —
     ONE definition shared by `_crawl_corpus_interior` and the
-    streaming-v6 frozen-model prep (r14 review: the stream ≡ batch
-    guarantee depends on these steps staying byte-equivalent, so they
-    exist once). ``materialize`` eagerly localCheckpoints the
-    structured-pages relation (it feeds both the gate branch and the
-    dedup branch; a persist here had no release path and leaked a
-    CacheManager entry per pipeline call — r14 review).
+    streaming frozen-model prep in `_v7_frozen_globals` (r14 review:
+    the stream ≡ batch guarantee depends on these steps staying
+    byte-equivalent, so they exist once). ``materialize`` eagerly
+    localCheckpoints the structured-pages relation (it feeds both the
+    gate branch and the dedup branch; a persist here had no release
+    path and leaked a CacheManager entry per pipeline call — r14
+    review).
 
     The robots gate consumes the DENIED id set (`crawl.
     robots_denied_ids`) via left-anti join rather than the allowed set
@@ -7274,9 +7052,10 @@ def _crawl_corpus_interior(
     persist_pages: bool = True,
     include_text: bool = False,
 ) -> DataFrame:
-    """Steps 2–5 of the v5/v6 recipes — everything after the robots
-    gate (eval holdout, page gate, survivor line dedup, census) —
-    shared so v6 differs from v5 ONLY in where its rules come from.
+    """Everything after the robots gate (eval holdout, page gate,
+    survivor line dedup, census) — shared by the batch v7 interior
+    and the frozen streaming twin, so the two differ ONLY in whether
+    the corpus-global relations are frozen.
 
     ``boiler``/``eval_grams`` freeze the two corpus-global relations
     (the frequent-line model and the holdout gram set) so the SAME
@@ -7332,31 +7111,6 @@ def _crawl_corpus_interior(
             ),
         )
     )
-
-
-def training_data_pipeline_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v6 recipe — v5 with its PRE-BUILT rules relation replaced by
-    the LIVE crawl-politeness loop (the r12 verdict's strongest form
-    of "close the loop"): robots BODIES fetched per host over real
-    HTTP from the fake site (executor-side `demand_fanout`, one GET
-    per host), parsed relationally (`parse_robots_txt` — the bodies
-    relation is host-keyed, so one parse per host by construction),
-    scoped to ``farmbot/1.0`` (RFC 9309 substring matching + *
-    fallback for the ≡0 mod 3 hosts that publish no farmbot group),
-    and applied as the same cheapest-first robots gate. Steps 2–5
-    (holdout → page gate → survivor line dedup → census) are shared
-    verbatim with v5 (`_crawl_corpus_interior`), so the oracle
-    differs from v5's ONLY in the gate arithmetic. Non-2xx robots
-    fetches follow RFC 9309 §2.3.1 via `_live_robots_rules`."""
-    from farmrpg_etl_spark.operators.crawl import robots_denied_ids
-
-    docs = load_table(spark, sf_dir, "documents")
-    host = F.concat(F.col("source"), F.lit(".example.com"))
-    rules = _live_robots_rules(
-        spark, docs.select(host.alias("key")).distinct(), "farmbot/1.0"
-    )
-    denied = robots_denied_ids(_v6_urls(docs), rules)
-    return _crawl_corpus_interior(docs, denied)
 
 
 def streaming_ccnet_per_lang_docs(
@@ -7426,11 +7180,12 @@ def streaming_ccnet_per_lang_docs(
 
 def training_data_pipeline_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """v7 — the COMPLETE Wenzek et al. recipe, gates in production
-    order: the live crawl-politeness loop (v6's robots gate over real
-    HTTP) → eval holdout → C4/Gopher page gate → survivor line dedup →
-    contamination census → and finally CCNet's per-language
-    perplexity cut: the interior's own language tag keys ONE order-5
-    KN LM per surviving language (single keyed corpus pass), every
+    order: the live crawl-politeness loop (robots bodies over real
+    HTTP, as in `crawl_robots_e2e_docs`) → eval holdout → C4/Gopher
+    page gate → survivor line dedup → contamination census → and
+    finally CCNet's per-language perplexity cut: the interior's own
+    language tag keys ONE order-5 KN LM per surviving language
+    (single keyed corpus pass), every
     survivor is scored by ITS language's model, and the per-language
     self-calibrated tail is cut (`ccnet_per_lang_filter`). Output:
     (doc_id, lang, n_kept, out_digest, n_contaminated, n_tok, nll,
@@ -7444,15 +7199,16 @@ def training_data_pipeline_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the final join-back; the keyed KN ladder embeds its source
     ~20×, and a cached-but-full lineage still pays Catalyst
     re-optimization per action — measured: nll 50 s -> seconds at
-    sf0.001 after truncation). Body shared with the v8/report-card
+    sf0.001 after truncation). Body shared with the v8/v9
     compositions via `_v7_interior_scored`."""
     return _v7_interior_scored(spark, sf_dir)
 
 
-def _v6_urls(docs: DataFrame) -> DataFrame:
-    """The v6 URL synthesis (host + /Docs/<n>/{pub|x}/<id>) — shared
-    by the batch pipeline and its streaming twin so per-batch gate
-    arithmetic is identical by construction."""
+def _crawl_urls(docs: DataFrame) -> DataFrame:
+    """The crawl URL synthesis (host + /Docs/<n>/{pub|x}/<id>) —
+    shared by `crawl_robots_e2e_docs`, the batch v7 interior and its
+    streaming twin so per-batch gate arithmetic is identical by
+    construction."""
     host = F.concat(F.col("source"), F.lit(".example.com"))
     n = F.regexp_extract(F.col("source"), r"(\d+)", 1)
     return docs.select(
@@ -7469,77 +7225,19 @@ def _v6_urls(docs: DataFrame) -> DataFrame:
     )
 
 
-def streaming_pipeline_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The v6 corpus pipeline in its DEPLOYMENT regime (r13 verdict
-    #10): documents arrive as four micro-batches and flow through the
-    LIVE-crawl robots gate + the full interior per batch, against
-    FROZEN corpus-global models — the live-fetched rules relation,
-    the frequent-line (boilerplate) model, and the eval-holdout gram
-    set, each built once batch-side exactly as `training_data_
-    pipeline_v6` builds them. Every remaining decision (holdout
-    filter, C4/Gopher page gate, line removal, census) is
-    per-document, so continuous ingest ≡ the batch run — the oracle
-    IS the v6 oracle, pinning batch/stream equality cross-engine.
-    Batches merge through the replay-idempotent K1 writer.
-
-    Scale: per-trigger work is batch-sized and joins only broadcast
-    relations (rules, boiler, eval grams — all dimension-sized); no
-    stream-side state, no per-batch shuffle beyond the per-doc
-    aggregations. This is CCNet/RefinedWeb's actual incremental
-    shape: recalibrate the global models per snapshot, stream the
-    crawl through them."""
-
+def _v7_interior(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The v7 recipe up to its LM stage: live robots gate → holdout →
+    page gate → line dedup → census, carrying ``text_out`` for the
+    per-language KN stage in `_v7_interior_scored`."""
     from farmrpg_etl_spark.operators.crawl import robots_denied_ids
-    from farmrpg_etl_spark.operators.linededup import (
-        frequent_lines,
-        split_lines,
-    )
-    from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "source"
-    )
+    docs = load_table(spark, sf_dir, "documents")
     host = F.concat(F.col("source"), F.lit(".example.com"))
-    # frozen relations are localCheckpoint()ed, not persisted: each
-    # trigger's interior plan embeds them, and a cached-but-full
-    # lineage still pays per-trigger Catalyst re-optimization of the
-    # whole gate/census tree (the same lesson as v7's interior)
     rules = _live_robots_rules(
         spark, docs.select(host.alias("key")).distinct(), "farmbot/1.0"
-    ).localCheckpoint()
-    # frozen corpus-global models, built via the SAME survivor chain
-    # as batch v6 (shared helper — byte-equivalence by construction)
-    denied_full = robots_denied_ids(_v6_urls(docs), rules)
-    survivors = _crawl_survivors(docs, denied_full, materialize=False)
-    boiler = frequent_lines(
-        split_lines(survivors, "text_struct", "doc_id"), 2
-    ).localCheckpoint()
-    from farmrpg_etl_spark.functions.hashing import word_ngrams
-
-    eval_grams = (
-        docs.filter(F.col("doc_id") % 101 == 0)
-        .select(
-            F.explode(
-                F.array_distinct(word_ngrams(F.col("text"), 13))
-            ).alias("gram")
-        )
-        .distinct()
-        .localCheckpoint()
     )
-    sink = ParquetTable(spark, _sink_scratch("v6ssink"))
-
-    def proc(batch_df: DataFrame, batch_id: int) -> None:
-        denied_b = robots_denied_ids(_v6_urls(batch_df), rules)
-        out = _crawl_corpus_interior(
-            batch_df, denied_b, boiler=boiler, eval_grams=eval_grams,
-            persist_pages=False,
-        )
-        insert_if_absent(
-            sink, out, ["doc_id"], batch_id=batch_id, writer="v6stream"
-        )
-
-    _replay_stream(spark, docs, "doc_id", "v6s", proc)
-    return sink.read()
+    denied = robots_denied_ids(_crawl_urls(docs), rules)
+    return _crawl_corpus_interior(docs, denied, include_text=True)
 
 
 def _v7_interior_scored(
@@ -7548,25 +7246,16 @@ def _v7_interior_scored(
     """The complete v7 recipe (live robots gate → holdout → page gate
     → line dedup → census → per-language CCNet perplexity cut),
     returning the head/middle SURVIVOR relation — one definition
-    shared by the flagship `training_data_pipeline_v7` row, the v8
-    (DSIR-selection) composition, and the built-corpus report card,
-    so the three rows cannot silently fork on any gate.
+    shared by the flagship `training_data_pipeline_v7` row and the v8
+    (DSIR-selection) and v9 (full-build) compositions, so the rows
+    cannot silently fork on any gate.
     ``include_text`` carries ``text_out`` through for consumers that
     re-tokenize the survivors (DSIR's feature hash). The returned
     relation is a localCheckpointed leaf: survivor-count-sized, and
     the keyed KN ladder above it embeds its source ~20×."""
     from farmrpg_etl_spark.operators import langmodel as LM
-    from farmrpg_etl_spark.operators.crawl import robots_denied_ids
 
-    docs = load_table(spark, sf_dir, "documents")
-    host = F.concat(F.col("source"), F.lit(".example.com"))
-    rules = _live_robots_rules(
-        spark, docs.select(host.alias("key")).distinct(), "farmbot/1.0"
-    )
-    denied = robots_denied_ids(_v6_urls(docs), rules)
-    v7in = _crawl_corpus_interior(
-        docs, denied, include_text=True
-    ).localCheckpoint()
+    v7in = _v7_interior(spark, sf_dir).localCheckpoint()
     tables = LM.kn_ngram_tables(
         v7in, "text_out", "doc_id", order=5, key_cols=("lang",)
     )
@@ -7633,106 +7322,14 @@ def training_data_pipeline_v8(
     ).select("doc_id", "lang", "bucket", "logw", "gkey")
 
 
-def corpus_report_v7_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The report card a production build actually publishes: the
-    one-row audit of the BUILT corpus (v7's head/middle survivors),
-    not the raw snapshot (`corpus_report_docs` covers that). Same
-    card families over the survivor relation: document/token totals
-    (token count = the LM scorer's exact n_tok), exact-duplicate
-    count (out_digest fingerprints of the line-deduped text),
-    language spread (distinct langs + modal language with count,
-    (n, lang) struct-max tie-break), quality mass — here the
-    perplexity mass Σ round(nll·10⁴) as an exact integer (nll is
-    4-decimal by construction, so the micro-sum is exact; the built
-    corpus's quality signal IS the per-language LM the pipeline
-    trained), and the residual-contamination census (survivors still
-    sharing a 13-gram with the holdout). Every output is an exact
-    integer or a string — bit-stable across engines, partitionings,
-    and retries.
-
-    Scale: one pass over a survivor-count-sized checkpointed leaf;
-    three dimension-sized aggregates, broadcast-joined."""
-    surv = _v7_interior_scored(spark, sf_dir)
-    scal = surv.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tok").alias("n_tokens"),
-        F.countDistinct("out_digest").alias("n_fp"),
-        F.sum(F.round(F.col("nll") * F.lit(10000.0)).cast("long")).alias(
-            "sum_nll_tenk"
-        ),
-        F.sum((F.col("n_contaminated") > 0).cast("long")).alias(
-            "n_contaminated_docs"
-        ),
-    )
-    langs = surv.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-    top = langs.agg(
-        F.max(F.struct(F.col("n"), F.col("lang"))).alias("t"),
-        F.count(F.lit(1)).alias("n_langs"),
-    )
-    return scal.crossJoin(F.broadcast(top)).select(
-        "n_docs",
-        "n_tokens",
-        (F.col("n_docs") - F.col("n_fp")).alias("n_dup_docs"),
-        "n_langs",
-        F.col("t.lang").alias("top_lang"),
-        F.col("t.n").alias("top_lang_n"),
-        "sum_nll_tenk",
-        "n_contaminated_docs",
-    )
-
-
-def streaming_pipeline_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPLETE v7 recipe in its deployment regime (r14 verdict
-    #3): the composition of the two existing frozen-model streaming
-    bodies. Frozen batch-side, exactly as the batch rows build them:
-    the live-fetched robots rules, the frequent-line (boilerplate)
-    model, the eval-holdout gram set (the v6 globals), PLUS the
-    per-language order-5 KN models trained on the full batch
-    interior's survivors and their self-calibrated per-language
-    thresholds (the per-lang CCNet globals). Documents then arrive as
-    four micro-batches; each batch runs the v6 interior against the
-    frozen globals and its survivors are scored by THEIR language's
-    frozen model and cut against the frozen constants — merged
-    through the replay-idempotent K1 writer. Every per-batch decision
-    is per-document against frozen relations, so continuous ingest ≡
-    the batch run: the row shares `training_data_pipeline_v7`'s
-    oracle verbatim, pinning stream ≡ batch cross-engine.
-
-    Scale: per-trigger work is batch-sized; the interior joins only
-    broadcast dimension relations, and scoring joins the batch once
-    on the (lang, ctx) prefixed keys against LM-sized frozen leaves —
-    recalibrate per snapshot, stream the crawl through the frozen
-    models, CCNet's actual incremental shape."""
-    from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "source"
-    )
-    fz = _v7_frozen_globals(spark, docs)
-    sink = ParquetTable(spark, _sink_scratch("v7ssink"))
-
-    def proc(batch_df: DataFrame, batch_id: int) -> None:
-        out = _v7_frozen_batch(batch_df, fz)
-        insert_if_absent(
-            sink, out, ["doc_id"], batch_id=batch_id, writer="v7stream"
-        )
-
-    _replay_stream(spark, docs, "doc_id", "v7s", proc)
-    from farmrpg_etl_spark.operators import langmodel as LM
-
-    LM.unpersist_kn_tables(fz["tables"])
-    return sink.read()
-
-
 def _v7_frozen_globals(spark: SparkSession, docs: DataFrame) -> dict:
     """Everything the v7-family streaming twins freeze batch-side,
-    built exactly as the batch rows build it — the v6 globals
-    (live-fetched robots rules, frequent-line model, holdout gram
-    set) plus the per-lang CCNet globals (keyed KN tables trained on
-    the full batch interior's survivors, self-calibrated per-language
-    thresholds). One definition shared by `streaming_pipeline_v7` and
-    `streaming_pipeline_v8` so the twins cannot fork from each other
-    or from the batch rows. All relations are lineage-truncated
+    built exactly as the batch rows build it — the crawl-interior
+    globals (live-fetched robots rules, frequent-line model, holdout
+    gram set) plus the per-lang CCNet globals (keyed KN tables
+    trained on the full batch interior's survivors, self-calibrated
+    per-language thresholds), so `streaming_pipeline_v9` cannot fork
+    from the batch rows. All relations are lineage-truncated
     leaves (localCheckpoint / frozen tables) — each trigger plans
     against leaves instead of re-optimizing the training lineage."""
     from farmrpg_etl_spark.functions.hashing import word_ngrams
@@ -7747,7 +7344,7 @@ def _v7_frozen_globals(spark: SparkSession, docs: DataFrame) -> dict:
     rules = _live_robots_rules(
         spark, docs.select(host.alias("key")).distinct(), "farmbot/1.0"
     ).localCheckpoint()
-    denied_full = robots_denied_ids(_v6_urls(docs), rules)
+    denied_full = robots_denied_ids(_crawl_urls(docs), rules)
     survivors_full = _crawl_survivors(docs, denied_full, materialize=False)
     boiler = frequent_lines(
         split_lines(survivors_full, "text_struct", "doc_id"), 2
@@ -7794,11 +7391,11 @@ def _v7_frozen_batch(
     interior: DataFrame | None = None,
     nll: DataFrame | None = None,
 ) -> DataFrame:
-    """One micro-batch through the complete frozen v7 recipe: the v6
-    interior against the frozen globals, survivors scored by THEIR
-    language's frozen model and cut against the frozen thresholds.
-    Returns the batch's v7 rows (the shared per-trigger body of both
-    streaming twins); ``include_text`` carries text_out through for
+    """One micro-batch through the complete frozen v7 recipe: the
+    crawl interior against the frozen globals, survivors scored by
+    THEIR language's frozen model and cut against the frozen
+    thresholds. Returns the batch's v7 rows (the per-trigger body of
+    the streaming v9 twin); ``include_text`` carries text_out through for
     v8's DSIR scoring. Pass the frozen full-corpus ``interior``/
     ``nll`` leaves to apply the same cut to the WHOLE snapshot
     without recomputing either (the v8 calibration path)."""
@@ -7806,7 +7403,7 @@ def _v7_frozen_batch(
     from farmrpg_etl_spark.operators.crawl import robots_denied_ids
 
     if interior is None:
-        denied_b = robots_denied_ids(_v6_urls(batch_df), fz["rules"])
+        denied_b = robots_denied_ids(_crawl_urls(batch_df), fz["rules"])
         interior = _crawl_corpus_interior(
             batch_df, denied_b, boiler=fz["boiler"],
             eval_grams=fz["eval_grams"], persist_pages=False,
@@ -7846,8 +7443,8 @@ def _v7_frozen_batch(
 
 
 def _v8_frozen_selection(docs: DataFrame, fz: dict):
-    """The frozen DSIR calibration shared by the v8 and v9 twins (one
-    definition so the twins cannot fork): the checkpointed full-
+    """The frozen DSIR calibration of the v9 twin (the batch v8
+    selection, frozen per snapshot): the checkpointed full-
     corpus survivor pool, the broadcast add-one-smoothed bucket
     log-ratio (fit on survivors vs the %101 eval holdout), and the
     batch rank-50 SELECTION FLOOR as a per-document keep predicate.
@@ -7898,65 +7495,6 @@ def _v8_frozen_selection(docs: DataFrame, fz: dict):
     else:  # empty survivor pool: nothing clears the (absent) floor
         keep = F.lit(False)
     return surv_full, scored_full, ratio, keep
-
-
-def streaming_pipeline_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v8 in its deployment regime: raw web streamed → filtered →
-    SELECTED, every model frozen per snapshot. On top of the v7
-    twin's frozen globals, the DSIR calibration freezes too: the
-    add-one-smoothed bucket log-ratio relation (fit batch-side on the
-    full survivor pool vs the eval holdout, `dsir_log_ratio`) and the
-    SELECTION CUTOFF — the full (gkey, doc_id) sort key of the batch
-    run's rank-50 row, so a 6-decimal Gumbel-key tie at the 50/51
-    boundary cannot admit an extra row. Each micro-batch then runs
-    the complete frozen recipe, scores its survivors against the
-    frozen ratio, and keeps exactly the documents that clear the
-    frozen floor — a per-document decision, so the union over batches
-    IS the batch top-50 (the shared batch v8 oracle pins stream ≡
-    batch cross-engine).
-
-    This is how importance-resampling selection actually deploys:
-    Gumbel-top-k needs a global order, which a stream cannot see —
-    freezing the k-th key per snapshot converts it into a stateless
-    per-document threshold, the same trick the per-language CCNet
-    twin uses for its calibrated thresholds.
-
-    Scale: the frozen ratio is n_buckets-sized and broadcast; the
-    cutoff is ONE scalar (the only collect, bounded by construction);
-    per-trigger work is batch-sized."""
-    from farmrpg_etl_spark.operators.quality import dsir_scored
-    from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "source"
-    )
-    fz = _v7_frozen_globals(spark, docs)
-    _, _, ratio, keep = _v8_frozen_selection(docs, fz)
-    sink = ParquetTable(spark, _sink_scratch("v8ssink"))
-
-    def proc(batch_df: DataFrame, batch_id: int) -> None:
-        # batch-sized leaf: the survivor relation feeds both the DSIR
-        # feature hash and the metadata join-back — one interior run
-        # per trigger, not two
-        surv_b = _v7_frozen_batch(
-            batch_df, fz, include_text=True
-        ).localCheckpoint()
-        sel = dsir_scored(
-            surv_b, None, "text_out", "doc_id", n_buckets=4096,
-            ratio=ratio,
-        ).filter(keep)
-        out = sel.join(
-            surv_b.select("doc_id", "lang", "bucket"), "doc_id"
-        ).select("doc_id", "lang", "bucket", "logw", "gkey")
-        insert_if_absent(
-            sink, out, ["doc_id"], batch_id=batch_id, writer="v8stream"
-        )
-
-    _replay_stream(spark, docs, "doc_id", "v8s", proc)
-    from farmrpg_etl_spark.operators import langmodel as LM
-
-    LM.unpersist_kn_tables(fz["tables"])
-    return sink.read()
 
 
 # --------------------------------------------------------------------------
@@ -8124,8 +7662,9 @@ def training_data_pipeline_v10(
 
 
 def corpus_report_v9_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The split-aware report card of the v9 build: the
-    `corpus_report_v7_docs` card families, grouped PER SPLIT over the
+    """The split-aware report card of the v9 build: the built-corpus
+    card families (`corpus_report_docs`'s, over pipeline output
+    instead of the raw snapshot), grouped PER SPLIT over the
     v8-selected corpus — one row per train/valid/test split present,
     so the leakage guarantee is auditable in the published artifact
     (a reviewer reads off each split's doc/token totals, duplicate
@@ -8480,11 +8019,10 @@ def streaming_logit_hashed_filter_docs(
 
 
 def streaming_pipeline_v9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v9 — the FULL BUILD — in its deployment regime, completing the
-    frozen-globals twin ladder (v6 → v7 → v8 → splits → v9): per
-    corpus snapshot the models AND the build plan freeze — the v7
-    globals, the DSIR ratio + rank-50 selection floor (the v8 twin's
-    frozen cutoff), and the PACKED SCHEDULE itself (selection → train
+    """v9 — the FULL BUILD — in its deployment regime: per corpus
+    snapshot the models AND the build plan freeze — the v7 globals,
+    the DSIR ratio + rank-50 selection floor (`_v8_frozen_selection`),
+    and the PACKED SCHEDULE itself (selection → train
     split → UniMax epoch fills → pack offsets). The schedule MUST
     freeze: a copy's global start offset is a prefix sum over the
     whole selected stream, which no per-document decision can see —
@@ -8499,7 +8037,7 @@ def streaming_pipeline_v9(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the frozen schedule is selection-sized (top-k × ≤
     max_epochs copies) and broadcast; per-trigger work is the frozen
     v7 recipe on the batch (batch-sized) plus that broadcast join;
-    the only collect is the v8 twin's one frozen-cutoff row."""
+    the only collect is the one frozen-cutoff row."""
     from farmrpg_etl_spark.operators.quality import dsir_scored
     from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent
 
@@ -8559,7 +8097,6 @@ def streaming_pipeline_v9(spark: SparkSession, sf_dir: str) -> DataFrame:
 _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "streaming_cdc_tws": streaming_cdc_tws,
     "ann_topk_pq": ann_topk_pq,
-    "ann_recall_pq": ann_recall_pq,
     "ann_topk_pq_rerank": ann_topk_pq_rerank,
     "ann_recall_pq_rerank": ann_recall_pq_rerank,
     "hybrid_retrieval_docs": hybrid_retrieval_docs,
@@ -8628,7 +8165,6 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q21_waiting_suppliers": q21_waiting_suppliers,
     "q2_min_cost_supplier": q2_min_cost_supplier,
     "robots_filter_docs": robots_filter_docs,
-    "training_data_pipeline_v4": training_data_pipeline_v4,
     "q20_excess_inventory_suppliers": q20_excess_inventory_suppliers,
     "text_normalize_docs": text_normalize_docs,
     "streaming_session_timeout": streaming_session_timeout,
@@ -8639,7 +8175,6 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "k_docstore_subdoc_sink": k_docstore_subdoc_sink,
     "k_schema_evolve_v2_sink": k_schema_evolve_v2_sink,
     "lang_id_script_docs": lang_id_script_docs,
-    "training_data_pipeline_v5": training_data_pipeline_v5,
     "q11_important_stock": q11_important_stock,
     "q16_supplier_count": q16_supplier_count,
     "q13_customer_distribution": q13_customer_distribution,
@@ -8681,7 +8216,6 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kn_bigram_lm_docs": kn_bigram_lm_docs,
     "kn_perplexity_docs": kn_perplexity_docs,
     "streaming_docstore_sink": streaming_docstore_sink,
-    "ann_recall_matryoshka": ann_recall_matryoshka,
     "parse_robots_rules_docs": parse_robots_rules_docs,
     "pii_cards_docs": pii_cards_docs,
     "kn_5gram_lm_docs": kn_5gram_lm_docs,
@@ -8689,7 +8223,6 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kn5_ppl_filter_docs": kn5_ppl_filter_docs,
     "hard_negatives_recall": hard_negatives_recall,
     "streaming_kn5_filter_docs": streaming_kn5_filter_docs,
-    "training_data_pipeline_v6": training_data_pipeline_v6,
     "crawl_robots_e2e_docs": crawl_robots_e2e_docs,
     "k_http_claims_sink": k_http_claims_sink,
     "temperature_mixture_docs": temperature_mixture_docs,
@@ -8730,7 +8263,6 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "neardup_canonical_docs": neardup_canonical_docs,
     "bpe_merge_candidates_docs": bpe_merge_candidates_docs,
     "semantic_decontaminate_embeddings": semantic_decontaminate_embeddings,
-    "streaming_pipeline_v6": streaming_pipeline_v6,
     "streaming_ccnet_per_lang_docs": streaming_ccnet_per_lang_docs,
     "training_data_pipeline_v7": training_data_pipeline_v7,
     "ccnet_per_lang_filter_docs": ccnet_per_lang_filter_docs,
@@ -8789,11 +8321,8 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "minhash_estimate_error_docs": minhash_estimate_error_docs,
     "cosine_pairs_embeddings": cosine_pairs_embeddings,
     "json_props_stats": json_props_stats,
-    "streaming_pipeline_v7": streaming_pipeline_v7,
     "training_data_pipeline_v8": training_data_pipeline_v8,
-    "corpus_report_v7_docs": corpus_report_v7_docs,
     "unimax_assemble_docs": unimax_assemble_docs,
-    "streaming_pipeline_v8": streaming_pipeline_v8,
     "leakage_safe_splits_docs": leakage_safe_splits_docs,
     "doremi_weights_docs": doremi_weights_docs,
     "q12_shipmode_priority": q12_shipmode_priority,

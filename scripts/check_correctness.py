@@ -81,6 +81,7 @@ def main() -> int:
             sdf = fn(spark, sf_dir)
             s_cols = list(sdf.columns)
             s_rows = [tuple(r) for r in sdf.collect()]
+            dt_spark = time.time() - t0
         except Exception:
             print(f"FAIL  {name}: spark error")
             traceback.print_exc(limit=3)
@@ -90,6 +91,7 @@ def main() -> int:
         if sql is None:
             print(f"SKIP  {name}: no oracle ({len(s_rows)} rows)")
             continue
+        t0 = time.time()
         try:
             res = con.sql(sql)
             d_cols = list(res.columns)
@@ -98,7 +100,7 @@ def main() -> int:
             print(f"FAIL  {name}: duckdb error: {str(e)[:200]}")
             n_fail += 1
             continue
-        dt = time.time() - t0
+        dt_duck = time.time() - t0
         problems = []
         if len(s_rows) != len(d_rows):
             problems.append(f"rows {len(s_rows)} vs {len(d_rows)}")
@@ -116,7 +118,10 @@ def main() -> int:
             print(f"FAIL  {name}: {'; '.join(problems)}")
             n_fail += 1
         else:
-            print(f"ok    {name}  ({len(s_rows)} rows, {dt:.1f}s)")
+            print(
+                f"ok    {name}  ({len(s_rows)} rows, md5 {hs[:8]}, "
+                f"spark {dt_spark:.1f}s, duckdb {dt_duck:.1f}s)"
+            )
             n_pass += 1
     print(f"\n{n_pass} ok, {n_fail} fail")
     return 1 if n_fail else 0

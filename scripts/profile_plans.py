@@ -6,8 +6,8 @@ into plans/<name>_<tag>.txt. Put the round and the side of the change
 in the tag, e.g. ``--tag r19_before``.
 
 Usage:
-    SPARK_GRAFT_CPUS=32 python scripts/profile.py --tag r19_before q1_pricing_summary ...
-    python scripts/profile.py --tag r19_before --no-plan <names...>   # time only
+    SPARK_GRAFT_CPUS=32 python scripts/profile_plans.py --tag r19_before q1_pricing_summary ...
+    python scripts/profile_plans.py --tag r19_before --no-plan <names...>   # time only
 """
 
 from __future__ import annotations

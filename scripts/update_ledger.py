@@ -8,10 +8,11 @@ Run after each round's ``CORRECTNESS_r{N}.json`` lands:
 The ledger records, per registry row, the NEWEST round with a green
 driver record (rows/schema/hash all matching — or rows-only for the
 oracle-less rows, which is the strongest record the driver emits for
-them). ``farmrpg_etl_spark.ledger.rotation_order`` derives the
-driver-visible registry order from this data structure, so the
-rotation contract can no longer be broken by a mis-ordered hand edit
-(r16 verdict #7).
+them). Names that are no longer ``queries.QUERIES`` keys are left
+out, so a deleted row's old records cannot come back as orphans.
+``farmrpg_etl_spark.ledger.rotation_order`` derives the driver-visible
+registry order from this data structure, so the rotation contract can
+no longer be broken by a mis-ordered hand edit (r16 verdict #7).
 """
 
 from __future__ import annotations
@@ -20,15 +21,21 @@ import glob
 import json
 import os
 import re
+import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def last_verified() -> dict[str, int]:
+    from farmrpg_etl_spark.queries import QUERIES
+
     out: dict[str, int] = {}
     for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
         for name, rec in json.load(open(f)).items():
+            if name not in QUERIES:
+                continue
             if not isinstance(rec, dict) or rec.get("err"):
                 continue
             if not rec.get("rows_match"):

@@ -4,6 +4,8 @@ allows."""
 
 from __future__ import annotations
 
+import re
+
 from farmrpg_etl_spark.operators.crawl import robots_filter
 
 RULES = [
@@ -382,45 +384,55 @@ def test_crawl_loop_over_real_http(spark):
     }
 
 
-def test_streaming_pipeline_v6_equals_batch(spark):
-    """Continuous == batch for the v6 corpus pipeline: four
-    micro-batches through the live-crawl gate + frozen global models
-    (rules, frequent-line set, holdout grams) produce EXACTLY the
-    batch pipeline's rows — the frozen-model construction makes every
-    per-batch decision per-document, so the equality is structural,
-    and this pins it end to end over real HTTP."""
-    from farmrpg_etl_spark.queries import (
-        streaming_pipeline_v6,
-        training_data_pipeline_v6,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    batch = {tuple(r) for r in training_data_pipeline_v6(spark, sf).collect()}
-    stream = {tuple(r) for r in streaming_pipeline_v6(spark, sf).collect()}
-    assert stream == batch
-    assert len(batch) > 0
+def _live_robots_allowed(doc_id: int, source: str) -> bool:
+    """Closed form of the live robots gate (`sources/fakesite.py`):
+    hosts whose number is ≡0 mod 3 deny every /Docs path to farmbot;
+    the others allow only the /pub/ carve-out that even doc_ids'
+    paths enter."""
+    n = int(re.search(r"(\d+)", source).group(1))
+    return n % 3 != 0 and doc_id % 2 == 0
 
 
-def test_pipeline_v7_composes_per_lang_cut_over_v6(spark):
-    """v7 = v6 + the per-language CCNet cut: v7's survivors are a
-    subset of v6's rows (same doc_id/n_kept/out_digest/lang/census),
+def test_pipeline_v7_composes_per_lang_cut_over_interior(spark):
+    """v7 = the crawl interior + the per-language CCNet cut. The
+    interior (live robots gate -> holdout -> page gate -> line dedup
+    -> census) keeps only robots-allowed, non-holdout docs with a sane
+    census, and its gates really gate. v7's survivors are a subset of
+    the interior's rows (same doc_id/n_kept/out_digest/lang/census),
     every survivor carries its own language's nll/bucket, and the
     tail is gone."""
     from farmrpg_etl_spark.queries import (
-        training_data_pipeline_v6,
+        _v7_interior,
         training_data_pipeline_v7,
     )
+    from farmrpg_etl_spark.sources.tables import load_table
 
     sf = "/root/testdata/sf0.001"
-    v6 = {
+    src = {
+        r["doc_id"]: r["source"]
+        for r in load_table(spark, sf, "documents")
+        .select("doc_id", "source")
+        .collect()
+    }
+    interior = {
         r["doc_id"]: (r["n_kept"], r["out_digest"], r["lang"],
                       r["n_contaminated"])
-        for r in training_data_pipeline_v6(spark, sf).collect()
+        for r in _v7_interior(spark, sf).collect()
     }
+    for doc_id, (n_kept, digest, lang, n_contaminated) in interior.items():
+        assert _live_robots_allowed(doc_id, src[doc_id]), doc_id
+        assert doc_id % 101 != 0
+        assert n_kept >= 0 and n_contaminated >= 0
+        assert len(digest) == 32
+        assert isinstance(lang, str) and len(lang) in (2, 3)
+    eligible = {
+        d for d, s in src.items() if _live_robots_allowed(d, s) and d % 101
+    }
+    assert 0 < len(interior) < len(eligible)
     v7 = training_data_pipeline_v7(spark, sf).collect()
-    assert 0 < len(v7) <= len(v6)
+    assert 0 < len(v7) <= len(interior)
     for r in v7:
-        assert v6[r["doc_id"]] == (
+        assert interior[r["doc_id"]] == (
             r["n_kept"], r["out_digest"], r["lang"], r["n_contaminated"]
         )
         assert r["bucket"] in ("head", "middle")
@@ -429,22 +441,28 @@ def test_pipeline_v7_composes_per_lang_cut_over_v6(spark):
     assert len({r["lang"] for r in v7}) > 1
 
 
-def test_streaming_v7_equals_batch_v7(spark):
-    """The streaming v7 twin (frozen v6 globals + frozen per-lang KN
-    models + frozen thresholds, four micro-batches through the
-    replay-idempotent writer) produces EXACTLY the batch v7 rows —
-    the frozen-model regime makes every decision per-document, so
-    continuous ingest must equal the batch run bit-for-bit."""
-    from farmrpg_etl_spark.queries import (
-        streaming_pipeline_v7,
-        training_data_pipeline_v7,
-    )
+def test_v7_interior_pages_materialize_once_no_cartesian(spark):
+    """The structured-pages relation inside the v7 interior
+    materializes ONCE (an eager localCheckpoint leaf — r14: a persist
+    here had no release path and leaked a cache entry per pipeline
+    call) and every gate and dedup branch reads that one RDD;
+    rules/eval-gram joins never degrade to cartesian products. The
+    check runs on `_v7_interior` because the v7 row returns a
+    checkpointed leaf whose plan shows none of this."""
+    from farmrpg_etl_spark.queries import _v7_interior
 
-    sf = "/root/testdata/sf0.001"
-    batch = {tuple(r) for r in training_data_pipeline_v7(spark, sf).collect()}
-    stream = {tuple(r) for r in streaming_pipeline_v7(spark, sf).collect()}
-    assert stream == batch
-    assert len(batch) > 0
+    df = _v7_interior(spark, "/root/testdata/sf0.001")
+    plan = df._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    rdds = {
+        leaves.apply(i).rdd().id()
+        for i in range(leaves.size())
+        if leaves.apply(i).nodeName() == "LogicalRDD"
+    }
+    assert len(rdds) == 1
+    assert "CartesianProduct" not in plan.toString()
+    phys = df._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in phys
 
 
 def test_pipeline_v8_selects_target_like_v7_survivors(spark):
@@ -477,49 +495,3 @@ def test_pipeline_v8_selects_target_like_v7_survivors(spark):
     assert max(r["logw"] for r in v8a) > min(r["logw"] for r in v8a)
 
 
-def test_corpus_report_v7_matches_v7_output(spark):
-    """The built-corpus report card's one row must recompute exactly
-    from the v7 survivor relation it audits: doc/token totals, digest
-    duplicates, language spread + modal language, exact nll micro-sum,
-    residual-contamination census."""
-    from farmrpg_etl_spark.queries import (
-        corpus_report_v7_docs,
-        training_data_pipeline_v7,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    v7 = training_data_pipeline_v7(spark, sf).collect()
-    card = corpus_report_v7_docs(spark, sf).collect()
-    assert len(card) == 1
-    c = card[0]
-    assert c["n_docs"] == len(v7)
-    assert c["n_tokens"] == sum(r["n_tok"] for r in v7)
-    assert c["n_dup_docs"] == len(v7) - len({r["out_digest"] for r in v7})
-    langs = {}
-    for r in v7:
-        langs[r["lang"]] = langs.get(r["lang"], 0) + 1
-    assert c["n_langs"] == len(langs)
-    top_n, top_lang = max((n, l) for l, n in langs.items())
-    assert (c["top_lang"], c["top_lang_n"]) == (top_lang, top_n)
-    assert c["sum_nll_tenk"] == sum(round(r["nll"] * 10000.0) for r in v7)
-    assert c["n_contaminated_docs"] == sum(
-        1 for r in v7 if r["n_contaminated"] > 0
-    )
-
-
-def test_streaming_v8_equals_batch_v8(spark):
-    """The streaming v8 twin freezes the DSIR log-ratio AND the
-    selection cutoff (the batch top-50's smallest Gumbel key), so the
-    union of per-batch selections must equal the batch v8 selection
-    exactly — Gumbel-top-k converted into a stateless per-document
-    threshold."""
-    from farmrpg_etl_spark.queries import (
-        streaming_pipeline_v8,
-        training_data_pipeline_v8,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    batch = {tuple(r) for r in training_data_pipeline_v8(spark, sf).collect()}
-    stream = {tuple(r) for r in streaming_pipeline_v8(spark, sf).collect()}
-    assert stream == batch
-    assert len(batch) == 50

@@ -81,3 +81,43 @@ def test_tws_rows_lead_any_prefix():
         if any(m in n for m in tws_markers) and n not in L.TWS_ROWS
     ]
     assert undeclared == [], undeclared
+
+
+def _repo_file(*parts):
+    import os
+
+    return os.path.join(os.path.dirname(Q.__file__), "..", *parts)
+
+
+def test_update_ledger_skips_rows_not_in_registry(tmp_path, monkeypatch):
+    """A CORRECTNESS record for a deleted row must not come back into
+    the ledger on the next regeneration (it would fail
+    test_ledger_covers_registry as an orphan)."""
+    import importlib.util
+    import json
+
+    spec = importlib.util.spec_from_file_location(
+        "update_ledger", _repo_file("scripts", "update_ledger.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    live = next(iter(Q.QUERIES))
+    green = {"rows_match": True, "hash_match": True}
+    (tmp_path / "CORRECTNESS_r99.json").write_text(
+        json.dumps({live: green, "row_deleted_from_registry": green})
+    )
+    monkeypatch.setattr(mod, "REPO", str(tmp_path))
+    assert mod.last_verified() == {live: 99}
+
+
+def test_bench_rows_are_registry_rows():
+    """Every row bench.py names is a registry key — otherwise a deleted
+    row only shows up as a KeyError minutes into a bench run."""
+    import bench
+
+    src = open(_repo_file("bench.py")).read()
+    literals = re.findall(r'_Q\[\s*"([^"]+)"\s*\]', src)
+    literals += re.findall(r'\brun\("([^"]+)"\)', src)
+    assert literals
+    names = set(bench.HEADLINE) | set(bench.EXTENDED) | set(literals)
+    assert sorted(names - set(Q.QUERIES)) == []
