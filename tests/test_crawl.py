@@ -6,7 +6,11 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from farmrpg_etl_spark.operators.crawl import robots_filter
+
+SF = "/root/testdata/sf0.001"
 
 RULES = [
     ("a.com", "/private", False),
@@ -393,32 +397,34 @@ def _live_robots_allowed(doc_id: int, source: str) -> bool:
     return n % 3 != 0 and doc_id % 2 == 0
 
 
-def test_pipeline_v7_composes_per_lang_cut_over_interior(spark):
-    """v7 = the crawl interior + the per-language CCNet cut. The
-    interior (live robots gate -> holdout -> page gate -> line dedup
-    -> census) keeps only robots-allowed, non-holdout docs with a sane
-    census, and its gates really gate. v7's survivors are a subset of
-    the interior's rows (same doc_id/n_kept/out_digest/lang/census),
-    every survivor carries its own language's nll/bucket, and the
-    tail is gone."""
-    from farmrpg_etl_spark.queries import (
-        _v7_interior,
-        training_data_pipeline_v7,
-    )
+@pytest.fixture(scope="module")
+def v7_interior(spark):
+    """The collected v7 interior — the v6 recipe (live robots gate ->
+    holdout -> page gate -> line dedup -> census) that v7 cuts per
+    language — plus each doc's source, built once for the tests that
+    read it."""
+    from farmrpg_etl_spark.queries import _v7_interior
     from farmrpg_etl_spark.sources.tables import load_table
 
-    sf = "/root/testdata/sf0.001"
     src = {
         r["doc_id"]: r["source"]
-        for r in load_table(spark, sf, "documents")
+        for r in load_table(spark, SF, "documents")
         .select("doc_id", "source")
         .collect()
     }
-    interior = {
+    rows = {
         r["doc_id"]: (r["n_kept"], r["out_digest"], r["lang"],
                       r["n_contaminated"])
-        for r in _v7_interior(spark, sf).collect()
+        for r in _v7_interior(spark, SF).collect()
     }
+    return src, rows
+
+
+def test_v7_interior_membership_invariants(v7_interior):
+    """Every interior doc is robots-allowed under the live gate,
+    outside the %101 holdout, and carries a sane census; the gates
+    really gate (some eligible docs are absent)."""
+    src, interior = v7_interior
     for doc_id, (n_kept, digest, lang, n_contaminated) in interior.items():
         assert _live_robots_allowed(doc_id, src[doc_id]), doc_id
         assert doc_id % 101 != 0
@@ -429,7 +435,18 @@ def test_pipeline_v7_composes_per_lang_cut_over_interior(spark):
         d for d, s in src.items() if _live_robots_allowed(d, s) and d % 101
     }
     assert 0 < len(interior) < len(eligible)
-    v7 = training_data_pipeline_v7(spark, sf).collect()
+
+
+def test_pipeline_v7_composes_per_lang_cut_over_v6(spark, v7_interior):
+    """v7 = v6 + the per-language CCNet cut, where the v6 recipe now
+    runs as `_v7_interior`: v7's survivors are a subset of the
+    interior's rows (same doc_id/n_kept/out_digest/lang/census),
+    every survivor carries its own language's nll/bucket, and the
+    tail is gone."""
+    from farmrpg_etl_spark.queries import training_data_pipeline_v7
+
+    _, interior = v7_interior
+    v7 = training_data_pipeline_v7(spark, SF).collect()
     assert 0 < len(v7) <= len(interior)
     for r in v7:
         assert interior[r["doc_id"]] == (
