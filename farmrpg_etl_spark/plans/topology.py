@@ -176,16 +176,12 @@ def user_pipeline_batch(
     return snaps
 
 
-_TTL_DEFAULT = object()  # "resolve by deployment shape" sentinel
-
-
 def chat_pipeline_streaming(
     spark: SparkSession,
     landing_dir: str,
     messages: ParquetTable,
     chat_docs: ParquetTable,
     checkpoint_dir: str | None = None,
-    state_ttl_ms: int | None | object = _TTL_DEFAULT,
 ):
     """E1 streaming form: payload landing zone (parquet file stream) →
     parse → stateful CDC → foreachBatch MERGE writers. Returns the
@@ -199,20 +195,15 @@ def chat_pipeline_streaming(
     indexes, db/chat.py:13-19) and restores per-message CDC state
     rather than re-deriving it from scratch.
 
-    ``state_ttl_ms`` is the CDC state-eviction TTL (see
-    ``chat_cdc_stream``). When left at the default it resolves by
-    deployment shape: 1 h eviction for uncheckpointed (continuous)
-    runs, ``None`` for checkpointed runs — because with a processing-
-    time TTL a RESTARTED available-now query inherits registered
-    timers from the checkpoint and keeps scheduling timer-check
-    micro-batches instead of terminating once the data is drained.
-    Pass an explicit value to override either way (a genuinely
-    continuous checkpointed deployment wants the TTL back)."""
+    The CDC state-eviction TTL (see ``chat_cdc_stream``) follows
+    the deployment shape: 1 h eviction for uncheckpointed (continuous)
+    runs, none for checkpointed runs — because with a processing-time
+    TTL a RESTARTED available-now query inherits registered timers
+    from the checkpoint and keeps scheduling timer-check micro-batches
+    instead of terminating once the data is drained."""
     from farmrpg_etl_spark.streaming.chat_cdc import chat_cdc_stream
 
-    if state_ttl_ms is _TTL_DEFAULT:
-        state_ttl_ms = None if checkpoint_dir is not None else 3_600_000
-
+    state_ttl_ms = None if checkpoint_dir is not None else 3_600_000
     payloads = spark.readStream.schema(PAYLOAD_SCHEMA).parquet(landing_dir)
     observations = chat_observations(payloads)
     changes = chat_cdc_stream(observations, state_ttl_ms=state_ttl_ms)

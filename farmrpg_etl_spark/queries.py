@@ -4885,12 +4885,12 @@ def streaming_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     p1.write.parquet(landing)
     q = topology.chat_pipeline_streaming(
-        spark, landing, messages, docs, checkpoint_dir=ckpt, state_ttl_ms=None
+        spark, landing, messages, docs, checkpoint_dir=ckpt
     )
     _await_stream(q)
     p2.write.mode("append").parquet(landing)
     q = topology.chat_pipeline_streaming(
-        spark, landing, messages, docs, checkpoint_dir=ckpt, state_ttl_ms=None
+        spark, landing, messages, docs, checkpoint_dir=ckpt
     )
     _await_stream(q)
     return _chat_e2e_result(messages, docs)

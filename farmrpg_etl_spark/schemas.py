@@ -24,20 +24,6 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-# --- landing zone: one row per HTTP poll result -------------------------
-# Models reference scrapers' fetch results (scrapers/chat.py:124-154).
-# `fetch_ts` replaces every in-parser datetime.now() (chat.py:36,91) so
-# parses are deterministic across executors and retries.
-RAW_PAYLOAD = StructType(
-    [
-        StructField("source", StringType(), False),   # chat|flags|mailbox|message|online|staff|profile
-        StructField("key", StringType(), True),       # room / mail id / username
-        StructField("fetch_ts", TimestampType(), False),
-        StructField("status", IntegerType(), False),
-        StructField("body", BinaryType(), False),
-    ]
-)
-
 # --- core chat message (models/chat.py:9-19 + message migration) --------
 MESSAGE = StructType(
     [

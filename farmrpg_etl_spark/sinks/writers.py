@@ -51,9 +51,7 @@ class ParquetTable:
     writer to the last batch id committed into this version or an
     earlier one. Both are written before the ``_CURRENT`` pointer swap,
     so a crash leaves either the old version and its guard or the new
-    version and its guard, never new data under an old guard. Versions
-    written before ``_BATCHES`` existed fall back to the per-writer
-    ``_LAST_BATCH_<writer>`` marker files of the table directory. A
+    version and its guard, never new data under an old guard. A
     version may hard-link data files of the version before it, so
     unchanged rows are never rewritten; deleting an old version removes
     only its links."""
@@ -91,32 +89,21 @@ class ParquetTable:
         return self._read_dir(os.path.join(self.path, f"v{v}"))
 
     def _read_dir(self, vdir: str) -> DataFrame:
-        """Read a version with its stored schema; versions written
-        before schemas were stored fall back to inference."""
-        try:
-            with open(os.path.join(vdir, "_SCHEMA")) as f:
-                schema = StructType.fromJson(json.load(f))
-        except FileNotFoundError:
-            return self.spark.read.parquet(vdir)
+        """Read a version with its stored schema."""
+        with open(os.path.join(vdir, "_SCHEMA")) as f:
+            schema = StructType.fromJson(json.load(f))
         return self.spark.read.schema(schema).parquet(vdir)
 
     def last_batch_id(self, writer: str = "default") -> int:
         return self._batches(self.current_version()).get(writer, -1)
 
     def _batches(self, v: int) -> dict[str, int]:
-        """Version ``v``'s per-writer batch ids; versions written
-        before ``_BATCHES`` existed fall back to the marker files."""
-        try:
-            with open(os.path.join(self.path, f"v{v}", "_BATCHES")) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            pass
-        batches = {}
-        for name in os.listdir(self.path):
-            if name.startswith("_LAST_BATCH_"):
-                with open(os.path.join(self.path, name)) as f:
-                    batches[name[len("_LAST_BATCH_"):]] = int(f.read().strip())
-        return batches
+        """Version ``v``'s per-writer batch ids; a table with no
+        version yet (``v == -1``) has none."""
+        if v < 0:
+            return {}
+        with open(os.path.join(self.path, f"v{v}", "_BATCHES")) as f:
+            return json.load(f)
 
     def _commit(
         self,

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from farmrpg_etl_spark.parse.stage import parse_payloads, parsed_rows, quarantine
+from farmrpg_etl_spark.sources.landing import PAYLOAD_SCHEMA
 
 FIXTURES = os.environ.get(
     "REFERENCE_FIXTURES", "/root/reference/test/scrapers/fixtures"
@@ -21,7 +22,6 @@ needs_fixtures = pytest.mark.skipif(
     not os.path.isdir(FIXTURES), reason="reference fixtures not available"
 )
 
-PAYLOAD_SCHEMA = "source string, key string, fetch_ts timestamp, status int, body binary"
 T = datetime(2022, 4, 17, 23, 59, 59)
 
 

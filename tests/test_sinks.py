@@ -789,28 +789,30 @@ def test_crash_after_pointer_swap_does_not_reapply_a_redelivered_batch(
     assert {r.key: r.n for r in t.read().collect()} == {"a": 3, "b": 5}
 
 
-def test_last_batch_id_falls_back_to_marker_files(spark, tmp_path):
-    """A version written before ``_BATCHES`` existed keeps its guard in
-    the table directory's ``_LAST_BATCH_<writer>`` files."""
-    import os
-
+def test_batches_carry_each_writer_across_other_commits(spark, tmp_path):
+    """Each version's ``_BATCHES`` carries every writer's last batch id
+    forward, so one writer's guard survives another writer's commit;
+    a table with no version yet has no batch ids."""
     t = ParquetTable(spark, str(tmp_path / "m"))
     schema = "id string, content string"
+    assert (t.last_batch_id("w"), t.last_batch_id("other")) == (-1, -1)
     insert_if_absent(
         t, spark.createDataFrame([("m1", "a")], schema), ["id"], batch_id=3,
         writer="w",
     )
-    os.remove(os.path.join(_vdir(t, 0), "_BATCHES"))
-    with open(os.path.join(t.path, "_LAST_BATCH_w"), "w") as f:
-        f.write("2")
-    assert t.last_batch_id("w") == 2 and t.last_batch_id("other") == -1
-    # the next commit carries the marker's entries into its _BATCHES
+    assert (t.last_batch_id("w"), t.last_batch_id("other")) == (3, -1)
     insert_if_absent(
         t, spark.createDataFrame([("m2", "b")], schema), ["id"], batch_id=0,
         writer="other",
     )
-    os.remove(os.path.join(t.path, "_LAST_BATCH_w"))
-    assert (t.last_batch_id("w"), t.last_batch_id("other")) == (2, 0)
+    assert (t.last_batch_id("w"), t.last_batch_id("other")) == (3, 0)
+    # w's replay is still guarded after other's commit
+    insert_if_absent(
+        t, spark.createDataFrame([("m3", "c")], schema), ["id"], batch_id=3,
+        writer="w",
+    )
+    assert t.current_version() == 1
+    assert sorted(r.id for r in t.read().collect()) == ["m1", "m2"]
 
 
 def test_append_rejects_type_drift(spark, tmp_path):
@@ -868,7 +870,3 @@ def test_stored_schema_equals_inferred_for_every_writer(spark, tmp_path):
             vdir = _vdir(table, v)
             assert os.path.exists(os.path.join(vdir, "_SCHEMA"))
             assert table.read_version(v).schema == spark.read.parquet(vdir).schema
-    # a version written before schemas were stored is read by inference
-    os.remove(os.path.join(_vdir(t, 4), "_SCHEMA"))
-    assert t.read().schema == spark.read.parquet(_vdir(t, 4)).schema
-    assert t.read().count() == 3

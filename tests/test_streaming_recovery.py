@@ -22,8 +22,8 @@ from farmrpg_etl_spark.plans.topology import (
     chat_pipeline_streaming,
 )
 from farmrpg_etl_spark.sinks.writers import ParquetTable
+from farmrpg_etl_spark.sources.landing import PAYLOAD_SCHEMA
 
-PAYLOAD_SCHEMA = "source string, key string, fetch_ts timestamp, status int, body binary"
 T0 = datetime(2022, 4, 17, 23, 59, 59)
 
 CHAT_DIV = (
@@ -98,7 +98,7 @@ def test_midbatch_crash_then_restart_converges(spark, tmp_path):
     # run 1: batch 0 commits K1 (messages insert), then crashes before K4
     docs.armed = True
     q = chat_pipeline_streaming(
-        spark, landing, messages, docs, checkpoint_dir=ckpt, state_ttl_ms=None
+        spark, landing, messages, docs, checkpoint_dir=ckpt
     )
     with pytest.raises(StreamingQueryException, match="injected crash"):
         q.awaitTermination(120)
@@ -110,7 +110,7 @@ def test_midbatch_crash_then_restart_converges(spark, tmp_path):
     # no-op (batch-id guard), K4 applies. Exactly-once across the fan-out.
     docs.armed = False
     q = chat_pipeline_streaming(
-        spark, landing, messages, docs, checkpoint_dir=ckpt, state_ttl_ms=None
+        spark, landing, messages, docs, checkpoint_dir=ckpt
     )
     q.awaitTermination(120)
     q.stop()
@@ -125,7 +125,7 @@ def test_midbatch_crash_then_restart_converges(spark, tmp_path):
         landing
     )
     q = chat_pipeline_streaming(
-        spark, landing, messages, docs, checkpoint_dir=ckpt, state_ttl_ms=None
+        spark, landing, messages, docs, checkpoint_dir=ckpt
     )
     q.awaitTermination(120)
     q.stop()
@@ -159,7 +159,7 @@ def test_clean_stop_and_resume_picks_up_only_new_files(spark, tmp_path):
 
     _payload(spark, POLL1, T0).write.parquet(landing)
     q = chat_pipeline_streaming(
-        spark, landing, messages, docs, checkpoint_dir=ckpt, state_ttl_ms=None
+        spark, landing, messages, docs, checkpoint_dir=ckpt
     )
     q.awaitTermination(120)
     q.stop()
@@ -170,7 +170,7 @@ def test_clean_stop_and_resume_picks_up_only_new_files(spark, tmp_path):
         landing
     )
     q = chat_pipeline_streaming(
-        spark, landing, messages, docs, checkpoint_dir=ckpt, state_ttl_ms=None
+        spark, landing, messages, docs, checkpoint_dir=ckpt
     )
     q.awaitTermination(120)
     q.stop()

@@ -15,6 +15,7 @@ from farmrpg_etl_spark.plans.topology import (
     user_pipeline_batch,
 )
 from farmrpg_etl_spark.sinks.writers import ParquetTable
+from farmrpg_etl_spark.sources.landing import PAYLOAD_SCHEMA
 
 FIXTURES = os.environ.get(
     "REFERENCE_FIXTURES", "/root/reference/test/scrapers/fixtures"
@@ -23,7 +24,6 @@ needs_fixtures = pytest.mark.skipif(
     not os.path.isdir(FIXTURES), reason="reference fixtures not available"
 )
 
-PAYLOAD_SCHEMA = "source string, key string, fetch_ts timestamp, status int, body binary"
 T0 = datetime(2022, 4, 17, 23, 59, 59)
 
 CHAT_DIV = (
