@@ -610,19 +610,13 @@ def sf1_operator_points(spark) -> dict:
             k=5, m=8, ks=16, shortlist=200,
         )
 
-    def ann(impl):
-        # A/B of the two ann_topk_bruteforce impls at 10× corpus — the
-        # scale regime where the arrow prune+rescore kernel is supposed
-        # to win (at 1× the 2000-row corpus is fixed-cost dominated and
-        # the impls tie). Outputs are bit-identical (veckernel
-        # contract); only the physical plan differs.
-        def fn():
-            b = embeddings()
-            return S.ann_topk_bruteforce(
-                b, b.filter(F.col("vec_id") < 10), "embedding", "vec_id",
-                k=5, impl=impl,
-            )
-        return fn
+    def ann():
+        # exact top-k at 10× corpus: one broadcast crossJoin of the 10
+        # queries; the fold cost grows with corpus rows only
+        b = embeddings()
+        return S.ann_topk_bruteforce(
+            b, b.filter(F.col("vec_id") < 10), "embedding", "vec_id", k=5
+        )
 
     return {
         "minhash_lsh_pairs_10x": minhash,
@@ -634,8 +628,7 @@ def sf1_operator_points(spark) -> dict:
         "cut_dup_span_10x": cut_dup_span,
         "bpe_merges_10x": bpe_merges,
         "pq_rerank_10x": pq_rerank,
-        "ann_bruteforce_10x_arrow": ann("arrow"),
-        "ann_bruteforce_10x_catalyst": ann("catalyst"),
+        "ann_bruteforce_10x_catalyst": ann,
     }
 
 

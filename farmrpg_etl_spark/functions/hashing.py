@@ -116,10 +116,6 @@ def ngrams_from_tokens(toks: Column, n: int) -> Column:
     )
 
 
-def salted_md5(col: Column, salt: int) -> Column:
-    return F.md5(F.concat(F.lit(f"{salt}|"), col).cast("binary"))
-
-
 # Universal-hash family parameters for minhash: h_i(x) = (A[i]*x1 +
 # B[i]*x2 + C[i]) mod 2^31, where (x1, x2) are two 32-bit words of
 # md5(x). Multipliers are LARGE md5-derived odd constants (< 2^28):
@@ -138,36 +134,6 @@ def _family(i: int) -> tuple[int, int, int]:
         return int(hashlib.md5(f"{tag}{i}".encode()).hexdigest()[:7], 16) | 1
 
     return (_const("a"), _const("b"), _const("c"))
-
-
-def minhash_signature(shingle_col: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature: array of ``num_hashes`` minimum universal-hash
-    values (as longs) over the shingle set.
-
-    One md5 per shingle (not per shingle×family): the digest's first
-    two 32-bit words seed ``num_hashes`` affine families computed with
-    plain integer arithmetic — whole-stage-codegen'd, overflow-safe,
-    and reproducible in DuckDB via the same hex-substring casts.
-
-    Single pass over the shingles: one ``aggregate`` whose accumulator
-    is the running elementwise-min signature (``zip_with`` + ``least``).
-    Empty shingle sets yield the sentinel 2^31 (above every hash value).
-    """
-    init = F.array(*[F.lit(_MOD).cast("long") for _ in range(num_hashes)])
-
-    def _step(acc: Column, s: Column) -> Column:
-        h = F.md5(s.cast("binary"))
-        x1 = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-        x2 = F.conv(F.substring(h, 9, 8), 16, 10).cast("long")
-        hashes = F.array(
-            *[
-                (F.lit(a) * x1 + F.lit(b) * x2 + F.lit(c)) % F.lit(_MOD)
-                for a, b, c in (_family(i) for i in range(num_hashes))
-            ]
-        )
-        return F.zip_with(acc, hashes, lambda p, q: F.least(p, q))
-
-    return F.aggregate(shingle_col, init, _step)
 
 
 def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
@@ -194,44 +160,6 @@ def hex_digit_value(digit: Column) -> Column:
 
 
 SIMHASH_BITS = 64
-
-
-def _token_bits(tok: Column) -> Column:
-    """array<int> of the first 64 bits (MSB-first) of md5(token)."""
-    h = F.md5(tok.cast("binary"))
-    bits = []
-    for nibble in range(SIMHASH_BITS // 4):
-        d = hex_digit_value(F.substring(h, nibble + 1, 1))
-        for shift in (3, 2, 1, 0):  # MSB first within the nibble
-            bits.append(F.floor(d / F.lit(2**shift)).cast("int") % 2)
-    return F.array(*bits)
-
-
-def simhash64(tokens: Column) -> Column:
-    """64-bit SimHash over a token array, returned as a 16-char
-    lowercase hex string (string avoids int64 sign overflow and is
-    directly comparable across engines).
-
-    Bit b is set iff the count of tokens whose md5 has bit b set
-    exceeds half the token count (strict majority). Single pass:
-    one ``aggregate`` accumulating an array<int> of 64 bit-counts —
-    no per-bit re-scan of the token array, no shuffle.
-    """
-    zero = F.array(*[F.lit(0) for _ in range(SIMHASH_BITS)])
-    counts = F.aggregate(
-        tokens,
-        zero,
-        lambda acc, t: F.zip_with(acc, _token_bits(t), lambda a, b: a + b),
-    )
-    total = F.size(tokens)
-    hex_chars = []
-    for nibble in range(SIMHASH_BITS // 4):
-        val = F.lit(0)
-        for j, shift in enumerate((3, 2, 1, 0)):
-            bit_set = (F.lit(2) * F.element_at(counts, nibble * 4 + j + 1)) > total
-            val = val + F.when(bit_set, F.lit(2**shift)).otherwise(F.lit(0))
-        hex_chars.append(F.lit(HEX_DIGITS).substr(val + 1, F.lit(1)))
-    return F.concat(*hex_chars)
 
 
 def hamming_hex(a: Column, b: Column, bits: int = SIMHASH_BITS) -> Column:

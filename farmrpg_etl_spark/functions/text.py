@@ -90,7 +90,7 @@ def command_word(line: Column) -> Column:
 
 # --- LLM-pipeline text analysis ------------------------------------------
 
-# tiny per-language stopword marker sets for the n-gram/stopword
+# tiny per-language stopword marker sets for text_metrics' stopword
 # language-ID heuristic; chosen to be discriminative between the five
 # langs present in the synthetic corpus.
 LANG_MARKERS: dict[str, list[str]] = {
@@ -100,83 +100,6 @@ LANG_MARKERS: dict[str, list[str]] = {
     "es": ["el", "la", "que", "los", "y"],
     "zh": ["的", "是", "了", "在", "我"],
 }
-
-
-def _marker_padded(text_col: Column) -> Column:
-    """Whitespace-normalized form for marker counting: lowercase, every
-    whitespace run replaced by TWO spaces, and a leading/trailing space.
-    Every token is then bounded by ``' tok '`` and consecutive equal
-    tokens never share a boundary space, so plain substring counting is
-    exact token-equality counting ('the the the' is 3 hits, not 2).
-
-    This expression is structurally identical for every marker word, so
-    whole-stage codegen's subexpression elimination computes it once per
-    row regardless of how many languages consult it."""
-    return F.concat(
-        F.lit(" "), F.regexp_replace(F.lower(F.trim(text_col)), r"\s+", "  "), F.lit(" ")
-    )
-
-
-def _padded_marker_hits(padded: Column, words: list[str]) -> Column:
-    """Marker hit count given an already-normalized ``_marker_padded``
-    column: ``' word '`` substring occurrences, counted with
-    ``replace`` + ``length`` (pure string scans, no regex)."""
-    hits: Column | None = None
-    for w in words:
-        needle = f" {w} "
-        n = (F.length(padded) - F.length(F.replace(padded, F.lit(needle)))) / F.lit(
-            len(needle)
-        )
-        hits = n if hits is None else hits + n
-    return hits.cast("int")
-
-
-def _marker_hits(text_col: Column, words: list[str]) -> Column:
-    """Count of tokens equal to any marker word (exact token equality —
-    ``' word '`` substring occurrences in the double-space-normalized
-    string). Substring ``replace`` + ``length`` instead of a lookaround
-    regex per language: the regexes dominated the metrics projection
-    (measured ~5× slower than string scans on the documents corpus).
-
-    NOTE for wide projections: each call re-derives the normalization;
-    use :func:`text_metrics` (staged DataFrame form) when computing
-    several metrics at once."""
-    return _padded_marker_hits(_marker_padded(text_col), words)
-
-
-def lang_id(text_col: Column) -> Column:
-    """Heuristic language ID: argmax of stopword-marker hit counts,
-    deterministic tie-break by language code order; 'und' if no hits.
-
-    Argmax is expressed over an array literal — each score expression
-    appears exactly once in the plan. (The naive ``when``-chain fold
-    nests every previous score inside the next branch; conditional
-    branches are exempt from codegen subexpression elimination, so the
-    chain re-evaluates the regex scores exponentially — measured 6×
-    slower on the documents corpus.) ``array_position`` of the max
-    returns the first (= alphabetically-first) language on ties,
-    matching the oracle's forward-order strictly-greater CASE chain.
-
-    The scores array and its max are let_-bound (r17): referenced
-    from array_position AND the when-branch inside ONE expression
-    tree, the inline forms are exempt from codegen subexpression
-    elimination, so the whole marker-scan array was re-evaluated per
-    reference."""
-    from farmrpg_etl_spark.functions.hashing import let_
-
-    langs = sorted(LANG_MARKERS)
-    scores = F.array(*[_marker_hits(text_col, LANG_MARKERS[lang]) for lang in langs])
-    lang_arr = F.array(*[F.lit(lang) for lang in langs])
-    return let_(
-        scores,
-        lambda sc: let_(
-            F.array_max(sc),
-            lambda best: F.when(
-                best > 0,
-                F.element_at(lang_arr, F.array_position(sc, best).cast("int")),
-            ).otherwise(F.lit("und")),
-        ),
-    )
 
 
 # Character-trigram profiles for lang_id_ngram: per language, a small
@@ -214,23 +137,28 @@ def _trigram_score(lowered: Column, profile: dict[str, int]) -> Column:
 def lang_id_ngram(text_col: Column) -> Column:
     """Char-trigram-profile language ID over six Latin-script
     languages (de/en/es/fr/it/pt) — the scale path past the
-    stopword-marker heuristic of :func:`lang_id`: trigram profiles
-    see morphology ("sch", "ção", "gli") and don't need exact token
-    boundaries, so they classify text the marker lists miss (no
-    shared stopwords, glued punctuation, short fragments).
+    stopword-marker heuristic of :func:`text_metrics`' ``lang_pred``:
+    trigram profiles see morphology ("sch", "ção", "gli") and don't
+    need exact token boundaries, so they classify text the marker
+    lists miss (no shared stopwords, glued punctuation, short
+    fragments).
 
-    Same argmax-over-array-literal shape as :func:`lang_id` (each
-    score appears once in the plan; a when-chain would re-evaluate
-    them exponentially — see that docstring). Deterministic
-    alphabetical tie-break; 'und' when no profile trigram occurs.
-    One pure-codegen projection: no shuffle, no UDF, ~40 string
-    scans per row over a text column — embarrassingly parallel at
-    any scale.
+    Argmax is expressed over an array literal — each score expression
+    appears exactly once in the plan. (The naive ``when``-chain fold
+    nests every previous score inside the next branch; conditional
+    branches are exempt from codegen subexpression elimination, so the
+    chain re-evaluates the scores exponentially — measured 6× slower
+    for the stopword-marker argmax on the documents corpus.)
+    ``array_position`` of the max returns the first
+    (= alphabetically-first) language on ties, matching the oracle's
+    forward-order CASE chain; 'und' when no profile trigram occurs. One pure-codegen projection: no shuffle,
+    no UDF, ~40 string scans per row over a text column —
+    embarrassingly parallel at any scale.
 
-    let_-bound like :func:`lang_id` (r17): the lowered text, the
-    scores array and its max are each referenced several times inside
-    one expression tree, where inline forms are re-evaluated per
-    reference (the ~40 string scans ran up to 3x per row)."""
+    let_-bound (r17): the lowered text, the scores array and its max
+    are each referenced several times inside one expression tree,
+    where inline forms are re-evaluated per reference (the ~40 string
+    scans ran up to 3x per row)."""
     from farmrpg_etl_spark.functions.hashing import let_
 
     langs = sorted(LANG_TRIGRAM_PROFILES)
@@ -337,15 +265,6 @@ def lang_id_script(text_col: Column) -> Column:
     return let_(F.coalesce(text_col, F.lit("")), _decide)
 
 
-def token_count(text_col: Column) -> Column:
-    """Whitespace token count (0 for NULL/empty)."""
-    t = F.trim(text_col)
-    return F.coalesce(
-        F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, r"\s+"))),
-        F.lit(0),
-    )
-
-
 def bpe_ish_token_count(text_col: Column) -> Column:
     """BPE-ish token estimate: count of word-piece matches
     (letter runs, digit runs, single punctuation)."""
@@ -358,14 +277,6 @@ def punct_ratio(text_col: Column) -> Column:
     n = F.length(text_col)
     p = F.length(F.regexp_replace(text_col, r"[^.,;:!?'\"()\[\]{}-]", ""))
     return F.when(n == 0, F.lit(0.0)).otherwise(p.cast("double") / n.cast("double"))
-
-
-def stopword_ratio(text_col: Column, lang: str = "en") -> Column:
-    tokens = token_count(text_col)
-    hits = _marker_hits(text_col, LANG_MARKERS[lang])
-    return F.when(tokens == 0, F.lit(0.0)).otherwise(
-        hits.cast("double") / tokens.cast("double")
-    )
 
 
 def fingerprint(text_col: Column) -> Column:
@@ -488,8 +399,12 @@ def pii_count(text_col: Column) -> Column:
 def text_metrics(df, text_col: str = "text"):
     """All text-analysis metrics in one pass, with shared intermediates
     staged as explicit projection columns. Adds ``lang_pred n_tokens
-    n_bpe punct_ratio stop_ratio quality fp`` to ``df``; values are
-    bit-identical to the scalar functions above.
+    n_bpe punct_ratio stop_ratio quality fp`` to ``df``. ``lang_pred``
+    is the stopword-marker argmax over ``LANG_MARKERS`` (alphabetical
+    tie-break, 'und' without hits), ``n_tokens`` the whitespace token
+    count (0 for NULL/empty) and ``stop_ratio`` the English marker
+    share of those tokens; the other columns are bit-identical to the
+    scalar functions above.
 
     Why staged: the scalar forms each re-derive the whitespace
     normalization, and conditional branches (when/otherwise) are exempt
@@ -503,24 +418,25 @@ def text_metrics(df, text_col: str = "text"):
 
     Marker scoring (r18, VERDICT #5): the per-language stopword hits
     are counted over ONE staged token array — ``size(filter(toks,
-    t IN markers))`` per language — instead of the r17 padded-string
-    form, whose 25 ``replace()`` scans each re-walked (and
-    re-allocated) the whole document per marker word. Token-equality
-    counts are identical by construction (every token is whitespace-
-    bounded in the padded form too; marker words are distinct within a
-    language), and the token array doubles as the token count, saving
-    the separate ``token_count`` split. Same counting pattern as
-    ``quality._quality_raw_features``. Measured 1.29 s -> 0.96 s on
-    the sf0.1 documents corpus (text_metrics_docs, same-session).
+    t IN markers))`` per language — instead of the retired
+    padded-string form, whose 25 ``replace()`` scans each re-walked
+    (and re-allocated) the whole document per marker word. Token-
+    equality counts are identical by construction (every token is
+    whitespace-bounded in the padded form too; marker words are
+    distinct within a language), and the token array doubles as the
+    token count, saving a separate token-count split. Same counting
+    pattern as ``quality._quality_raw_features``. Measured 1.29 s ->
+    0.96 s on the sf0.1 documents corpus (text_metrics_docs,
+    same-session).
     """
     t = F.col(text_col)
     langs = sorted(LANG_MARKERS)
     s1 = df.withColumns(
         {
             # lowercase split: token BOUNDARIES (hence the count) are
-            # unchanged by lower(), so size() below equals
-            # token_count(t); lowercased tokens are what the marker
-            # sets match against
+            # unchanged by lower(), so size() below is the whitespace
+            # token count; lowercased tokens are what the marker sets
+            # match against
             "__tm_toks": F.split(F.lower(F.trim(t)), r"\s+"),
             "__tm_len": F.length(t),
             "__tm_punct": punct_ratio(t),

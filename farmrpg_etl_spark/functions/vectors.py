@@ -37,11 +37,6 @@ def dist2(a: Column, b: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    d = norm(a) * norm(b)
-    return F.when(d == 0, F.lit(0.0)).otherwise(dot(a, b) / d)
-
-
 def unit(a: Column, norm_col: Column) -> Column:
     """a / ||a|| per component (zero vectors pass through), so pairwise
     cosine degrades to a SINGLE dot fold — at Σ|group|² pair counts the

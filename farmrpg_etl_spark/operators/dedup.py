@@ -74,13 +74,15 @@ def minhash_signatures(
     """Per-document MinHash signature → (id, sig: array<long>).
 
     Relational formulation: explode shingles → project the two md5
-    words → ``groupBy(id).agg(min(h_i) …)``. Unlike the array-fold form
-    (``functions.hashing.minhash_signature``), every expression here is
-    a plain projection/aggregate — whole-stage codegen'd, with map-side
-    partial mins, so the shuffle carries only ``num_hashes`` longs per
-    document. ~10× faster than the interpreted higher-order-function
-    fold, and the plan scales: explode parallelism is row-wise, the
-    aggregation is partial-aggregatable.
+    words → ``groupBy(id).agg(min(h_i) …)``. One md5 per shingle seeds
+    all ``num_hashes`` affine families; empty shingle sets yield the
+    sentinel 2^31 (above every hash value). Every expression is a plain
+    projection/aggregate — whole-stage codegen'd, with map-side partial
+    mins, so the shuffle carries only ``num_hashes`` longs per document.
+    ~10× faster than a single-pass ``aggregate``/``zip_with`` fold over
+    the shingle array (interpreted higher-order functions), and the
+    plan scales: explode parallelism is row-wise, the aggregation is
+    partial-aggregatable.
     """
     sh = df.select(
         F.col(id_col),
@@ -129,7 +131,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     threshold: float = 0.5,
     shingle_k: int = 3,
-    exact_verify: bool = False,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate pairs.
 
@@ -137,12 +138,9 @@ def minhash_lsh_pairs(
     verification. Output: (id_a, id_b, jaccard) with id_a < id_b,
     distinct.
 
-    Verification is the *signature-overlap estimate* by default: the
-    signatures are already in the bucket rows, fixed-width, so no
-    document-sized payload is ever shuffled (the 100 TB path). With
-    ``exact_verify=True`` candidates are joined back to recomputed
-    shingle sets for exact Jaccard — costs two wide joins shipping
-    shingle arrays; only for small corpora or validation runs.
+    Verification is the *signature-overlap estimate*: the signatures
+    are already in the bucket rows, fixed-width, so no document-sized
+    payload is ever shuffled (the 100 TB path).
     """
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_k)
@@ -165,40 +163,25 @@ def minhash_lsh_pairs(
         & (F.col("a.band_key") == F.col("b.band_key"))
         & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
     )
-    if exact_verify:
-        cand = joined.select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        ).dropDuplicates(["id_a", "id_b"])
-        sh = df.select(
-            F.col(id_col), H.shingles(F.col(text_col), shingle_k).alias("__sh")
-        )
-        pairs = (
-            cand
-            .join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sh", "sh_a"), "id_a")
-            .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sh", "sh_b"), "id_b")
-            .withColumn("jaccard", F.round(H.jaccard(F.col("sh_a"), F.col("sh_b")), 6))
-        )
-    else:
-        # The estimate is computed per band collision BEFORE the pair
-        # dedup (r17): a signature pair always yields the same
-        # estimate, so values are unchanged, but the distinct then
-        # aggregates three scalars instead of carrying the signature
-        # ARRAYS — array grouping state forced a SortAggregate (sort +
-        # sort-merge per side); on scalars it is a plain HashAggregate.
-        # Measured 2.1-2.9 s -> 0.8-1.3 s for the headline row at
-        # sf0.1; the extra estimates per duplicate collision are 16
-        # long compares each, noise next to the sorts they replace.
-        pairs = joined.select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.round(
-                H.minhash_jaccard_estimate(
-                    F.col("a.sig"), F.col("b.sig"), num_hashes
-                ),
-                6,
-            ).alias("jaccard"),
-        ).dropDuplicates(["id_a", "id_b"])
+    # The estimate is computed per band collision BEFORE the pair
+    # dedup (r17): a signature pair always yields the same
+    # estimate, so values are unchanged, but the distinct then
+    # aggregates three scalars instead of carrying the signature
+    # ARRAYS — array grouping state forced a SortAggregate (sort +
+    # sort-merge per side); on scalars it is a plain HashAggregate.
+    # Measured 2.1-2.9 s -> 0.8-1.3 s for the headline row at
+    # sf0.1; the extra estimates per duplicate collision are 16
+    # long compares each, noise next to the sorts they replace.
+    pairs = joined.select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        F.round(
+            H.minhash_jaccard_estimate(
+                F.col("a.sig"), F.col("b.sig"), num_hashes
+            ),
+            6,
+        ).alias("jaccard"),
+    ).dropDuplicates(["id_a", "id_b"])
     return pairs.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
 
 
@@ -208,8 +191,9 @@ def simhash_fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame
     self-join on the value); Hamming-close fingerprints via
     ``functions.hashing.hamming_hex`` after a band join.
 
-    Relational formulation (same values as ``functions.hashing.
-    simhash64``): explode tokens → per nibble, map the md5 hex digit
+    Bit b is set iff a strict majority of the document's tokens have
+    bit b set in their md5. Relational formulation: explode tokens →
+    per nibble, map the md5 hex digit
     through a 16-entry literal table to a LONG packing its 4 bit
     values into 16-bit lanes → 16 packed sums (+ token count) per
     document → unpack lane counts, majority-vote each bit, emit hex.
@@ -518,12 +502,11 @@ def ngram_jaccard_pairs(
     block_col: str,
     shingle_k: int = 3,
     threshold: float = 0.0,
-    use_length_band: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard within a blocking key (e.g. language).
 
     The caller's block is composed with a token-length band
-    (``use_length_band``) so a skewed block (one dominant language)
+    (:func:`length_band`) so a skewed block (one dominant language)
     cannot produce |block|² pairs: two docs in different length bands
     have bounded-above Jaccard, and the band key splits the dominant
     block into near-uniform sub-blocks. Output (id_a, id_b, jaccard)
@@ -549,9 +532,11 @@ def ngram_jaccard_pairs(
     relation."""
     if threshold < 0:
         raise ValueError("threshold must be >= 0 (zero-overlap pairs never emit)")
-    block = F.col(block_col).cast("string")
-    if use_length_band:
-        block = F.concat_ws("#", block, length_band(F.col(text_col)).cast("string"))
+    block = F.concat_ws(
+        "#",
+        F.col(block_col).cast("string"),
+        length_band(F.col(text_col)).cast("string"),
+    )
     sh = df.select(
         F.col(id_col),
         block.alias("__block"),

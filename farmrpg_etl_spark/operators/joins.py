@@ -54,14 +54,13 @@ def fk_lookup(
     parent: DataFrame,
     child_key: str,
     parent_key: str,
-    broadcast_parent: bool = True,
 ) -> DataFrame:
     """J3 — FK hydrate (select_related): child ⋈ parent on the FK.
 
     Reference db/core/models.py:115-126. The parent (user table) is
     small → broadcast; Catalyst prunes parent columns not selected
     downstream."""
-    p = F.broadcast(parent) if broadcast_parent else parent
+    p = F.broadcast(parent)
     return child.join(p, child[child_key] == p[parent_key], "inner")
 
 

@@ -123,32 +123,10 @@ def ann_topk_bruteforce(
     vec_col: str,
     id_col: str,
     k: int = 10,
-    impl: str = "auto",
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query (query_id, neighbor_id,
     cosine, rank). Excludes self-matches. Queries should be small —
-    they are broadcast (catalyst impl) / collected into the kernel
-    closure (arrow impl), the same smallness contract either way.
-
-    ``impl="arrow"`` is the vectorized two-phase path: a numpy
-    ``mapInPandas`` kernel prunes each corpus batch to a small
-    candidate set with one matmul (``operators/veckernel.py``), then
-    the SAME Catalyst fold expressions as the ``"catalyst"`` impl
-    rescore only the candidates — final values are bit-identical to
-    the pure-Catalyst plan (same expression tree, same double inputs),
-    so both impls hash-match the DuckDB oracle. ``"catalyst"`` keeps
-    the UDF-free single-plan form as the oracle-parity reference.
-
-    ``impl="auto"`` (default) is a cost-based pick, the same kind of
-    physical decision as Catalyst's broadcast threshold: fold cost is
-    |corpus|·|queries| interpreted dots, while the arrow kernel's cost
-    is one matmul (flat in |queries|) plus a fixed Python-worker toll
-    per corpus partition. Measured on a 20k-vector corpus: 10 queries
-    → catalyst 2× faster; the kernel wins once the query set reaches
-    a few dozen. The query count is known driver-side (the arrow path
-    collects queries anyway), so the switch costs one bounded count."""
-    if impl == "auto":
-        impl = "arrow" if queries.limit(32).count() >= 32 else "catalyst"
+    they are broadcast against the corpus in one UDF-free plan."""
     q = F.broadcast(
         _unitize(
             queries.select(
@@ -158,35 +136,18 @@ def ann_topk_bruteforce(
             "__raw", "qv",
         )
     )
-    if impl == "arrow":
-        from farmrpg_etl_spark.operators import veckernel
-
-        query_rows = [
-            (r[0], r[1])
-            for r in queries.select(
-                F.col(id_col), V.as_double(F.col(vec_col))
-            ).collect()
-        ]
-        cand = veckernel.topk_candidates(
-            corpus.select(F.col(id_col), F.col(vec_col)),
-            vec_col, id_col, query_rows, k,
-        )
-        scored = _unitize(cand, "__raw", "cv").join(q, "query_id").withColumn(
-            "cosine", F.round(V.dot(F.col("qv"), F.col("cv")), 6)
-        )
-    else:
-        c = _unitize(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                V.as_double(F.col(vec_col)).alias("__raw"),
-            ),
-            "__raw", "cv",
-        )
-        scored = (
-            c.crossJoin(q)
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .withColumn("cosine", F.round(V.dot(F.col("qv"), F.col("cv")), 6))
-        )
+    c = _unitize(
+        corpus.select(
+            F.col(id_col).alias("neighbor_id"),
+            V.as_double(F.col(vec_col)).alias("__raw"),
+        ),
+        "__raw", "cv",
+    )
+    scored = (
+        c.crossJoin(q)
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .withColumn("cosine", F.round(V.dot(F.col("qv"), F.col("cv")), 6))
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )

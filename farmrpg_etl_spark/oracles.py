@@ -40,7 +40,7 @@ from farmrpg_etl_spark.functions.hashing import _MOD, _family  # same constants
 
 
 def _sig_elem(i: int) -> str:
-    """One MinHash signature element (== hashing.minhash_signature):
+    """One MinHash signature element (== dedup.minhash_signatures):
     min over shingles of (A*x1 + B*x2 + C) mod 2^31, where x1/x2 are
     the first two 32-bit words of md5(shingle)."""
     a, b, c = _family(i)
@@ -2874,22 +2874,8 @@ SELECT event_id, event_type,
 FROM events WHERE event_id % 3 = 0
 """
 
-ORACLES["k3_upsert_sink"] = """
-WITH c AS (SELECT c_custkey, c_name, c_acctbal FROM customer),
-u AS (
-  SELECT c_custkey, c_name, round(c_acctbal + 100, 2) AS c_acctbal
-  FROM c WHERE c_custkey <= 100
-), i AS (
-  SELECT c_custkey + 3000000 AS c_custkey,
-         'ins_' || CAST(c_custkey AS VARCHAR) AS c_name,
-         0.0 AS c_acctbal
-  FROM c WHERE c_custkey <= 50
-), inc AS (SELECT * FROM u UNION ALL SELECT * FROM i)
-SELECT coalesce(e.c_custkey, inc.c_custkey) AS c_custkey,
-       coalesce(e.c_name, inc.c_name) AS c_name,
-       coalesce(inc.c_acctbal, e.c_acctbal) AS c_acctbal
-FROM c e FULL OUTER JOIN inc ON e.c_custkey = inc.c_custkey
-"""
+# the K3 sink commits the same upsert end state as the J4 batch form
+ORACLES["k3_upsert_sink"] = ORACLES["j4_upsert"]
 
 # k3_snapshot_append_sink: commit 1 = within-batch LAG changes over
 # even event_ids; commit 2 = within-batch changes over odd event_ids,
@@ -3100,14 +3086,8 @@ SELECT id, room, ts, CAST(2 AS BIGINT) AS flags
 FROM ({_SQLDB_MSG.format(modulo=400)})
 """
 
-ORACLES["s_http_poll_roundtrip"] = f"""
-SELECT source, key,
-       TIMESTAMP '2024-06-01 12:00:00' AS fetch_ts,
-       200 AS status,
-       CAST(length(source || '|' || coalesce(key, '')) AS INT) AS n_bytes,
-       md5(source || '|' || coalesce(key, '')) AS body_digest
-FROM (VALUES {_LANDING_VALUES}) AS t(source, key)
-"""
+# polled over real HTTP: the same landed rows as the local round-trip
+ORACLES["s_http_poll_roundtrip"] = ORACLES["s_landing_roundtrip"]
 
 ORACLES["s_http_demand_fanout"] = """
 SELECT 'message' AS source,
@@ -3118,14 +3098,8 @@ SELECT 'message' AS source,
 FROM events WHERE event_id % 97 = 0
 """
 
-ORACLES["s4_demand_fanout"] = """
-SELECT 'message' AS source,
-       CAST(event_id AS VARCHAR) AS key,
-       200 AS status,
-       CAST(length('message:' || CAST(event_id AS VARCHAR)) AS INT) AS n_bytes,
-       md5('message:' || CAST(event_id AS VARCHAR)) AS body_digest
-FROM events WHERE event_id % 97 = 0
-"""
+# S4 demand fan-out: the same fetches as its HTTP twin
+ORACLES["s4_demand_fanout"] = ORACLES["s_http_demand_fanout"]
 
 
 # --------------------------------------------------------------------------
@@ -3527,22 +3501,7 @@ FROM documents
 # K6 claims gate: emit only on claims-JSON change (first obs included)
 # K7 over real HTTP: the server-recorded sendmessage form payloads ==
 # the dispatch result (same mail synthesis as bot_dispatch_replies)
-ORACLES["k_http_reply_sink"] = """
-SELECT doc_id AS reply_to_id,
-       'u' || CAST(doc_id AS VARCHAR) AS username,
-       CASE WHEN doc_id % 3 = 0 THEN 'RE: (no subject)'
-            ELSE 'RE: hi ' || CAST(doc_id AS VARCHAR) END AS subject,
-       CASE doc_id % 5
-         WHEN 0 THEN 'pong'
-         WHEN 1 THEN 'registered ' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 28)
-         WHEN 2 THEN 'error: firebase uid must be exactly 28 characters'
-         WHEN 3 THEN CASE WHEN doc_id % 10 = 3
-                          THEN 'uid: UID' || CAST(doc_id AS VARCHAR)
-                          ELSE 'not registered' END
-         ELSE 'unknown command; try ping, userinfo, register <uid>'
-       END AS body
-FROM documents
-"""
+ORACLES["k_http_reply_sink"] = ORACLES["bot_dispatch_replies"]
 
 
 # K6 over real HTTP: server-recorded accounts:update JSON payloads ==
@@ -5761,9 +5720,7 @@ FROM u
 """
 
 # dropDuplicatesWithinWatermark over unique event ids == distinct set.
-ORACLES["streaming_dedup_watermark_events"] = """
-SELECT event_id, user_id, event_type FROM events
-"""
+ORACLES["streaming_dedup_watermark_events"] = ORACLES["streaming_dedup_events"]
 
 # Ordered 3-step funnel, first-touch semantics, 24h step windows.
 _FUNNEL_STEPS = """

@@ -1681,11 +1681,7 @@ def cosine_pairs_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 10)
-    # 10 queries: below the measured arrow/catalyst crossover, so pin
-    # catalyst here rather than paying impl="auto"'s count job
-    return similarity.ann_topk_bruteforce(
-        e, q, "embedding", "vec_id", k=5, impl="catalyst"
-    )
+    return similarity.ann_topk_bruteforce(e, q, "embedding", "vec_id", k=5)
 
 
 def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2057,7 +2053,7 @@ def ann_recall_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         similarity.ann_topk_bruteforce(
             load_table(spark, sf_dir, "embeddings"),
             load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 10),
-            "embedding", "vec_id", k=10, impl="catalyst",
+            "embedding", "vec_id", k=10,
         ).select("query_id", "neighbor_id")
     )
     approx = ann_topk_ivfpq(spark, sf_dir).select("query_id", "neighbor_id")
@@ -2175,8 +2171,7 @@ def ann_recall_ivf_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     eraw = load_table(spark, sf_dir, "embeddings")
     exact = similarity.ann_topk_bruteforce(
-        eraw, eraw.filter(F.col("vec_id") < 10), "embedding", "vec_id",
-        k=10, impl="catalyst",
+        eraw, eraw.filter(F.col("vec_id") < 10), "embedding", "vec_id", k=10
     ).select("query_id", "neighbor_id")
     return _recall_at_k(exact, approx).join(n_cand, "query_id", "left").select(
         "query_id",
@@ -3307,12 +3302,7 @@ def cluster_quota_sample_embeddings(spark: SparkSession, sf_dir: str) -> DataFra
     ).select("vec_id", "cluster", "sample_rank")
 
 
-def kmeans_lloyd(
-    e: DataFrame,
-    n_iters: int,
-    impl: str = "catalyst",
-    checkpoint_every: int = 3,
-) -> DataFrame:
+def kmeans_lloyd(e: DataFrame, n_iters: int) -> DataFrame:
     """Full Lloyd iteration loop over a (vec_id, cluster, v) relation:
     each round recomputes centroids from the current assignment
     (M-step: posexplode → one keyed decimal-exact aggregation) and
@@ -3320,15 +3310,14 @@ def kmeans_lloyd(
     centroids, map-side top-1 — the corpus is never shuffled).
 
     Lineage control: each round's assignment is persist()ed (computed
-    once, previous round's blocks freed), and every
-    ``checkpoint_every``-th round additionally passes through
-    ``iterate.truncate_lineage`` (RELIABLE checkpoint — durable files,
-    survivable across executor loss) so the plan tree and the
-    recompute-on-loss window both stay bounded over long runs. A
-    checkpoint every round (the r3 form) paid a checkpoint-write job
-    per iteration — pure fixed cost at bench scale and 2× the round
-    I/O at any scale; every-k amortizes it while capping worst-case
-    recompute at k rounds. At 100 TB each round costs one scan + one
+    once, previous round's blocks freed), and every third round
+    additionally passes through ``iterate.truncate_lineage`` (RELIABLE
+    checkpoint — durable files, survivable across executor loss) so
+    the plan tree and the recompute-on-loss window both stay bounded
+    over long runs. A checkpoint every round (the r3 form) paid a
+    checkpoint-write job per iteration — pure fixed cost at bench
+    scale and 2× the round I/O at any scale; every third round
+    amortizes it while capping worst-case recompute at three rounds. At 100 TB each round costs one scan + one
     centroid-sized aggregation, and empty clusters drop out naturally.
     Deterministic: quantized component sums, explicit (d2, cluster)
     tie-break — bit-reproducible in any engine."""
@@ -3353,43 +3342,15 @@ def kmeans_lloyd(
                 "cluster", F.transform(F.col("pc"), lambda s: s.centroid).alias("cvec")
             )
         )
-        if impl == "arrow":
-            # vectorized E-step (veckernel docstring has the full
-            # contract): collect the centroid table once (tiny — it is
-            # the broadcast side either way), prune each row to 3
-            # nearest-centroid candidates with one numpy matmul, then
-            # rescore ONLY the candidates with the identical Catalyst
-            # dist2 fold. The rescore join reads the collected rows
-            # back as a local relation so the M-step aggregation runs
-            # once per round, not twice; values are exact IEEE doubles
-            # round-tripped through the driver, so d2 is bit-identical
-            # to the catalyst impl's (pytest-pinned). This is the
-            # LARGE-k path: fold evals drop from |clusters| to 3 per
-            # row. With few clusters the "catalyst" impl wins instead —
-            # the whole n_iters loop stays ONE lazy plan (no per-round
-            # collect barrier, no Python workers): measured 0.64 s vs
-            # 4.2 s at sf0.1's 2000×26 — so it is the default; flip to
-            # "arrow" when |clusters| ≫ 3 makes the per-row fold chain
-            # the dominant term.
-            from farmrpg_etl_spark.operators import veckernel
-
-            cent_rows = [(r["cluster"], list(r["cvec"])) for r in cents.collect()]
-            cents_local = e.sparkSession.createDataFrame(
-                cent_rows, cents.schema
-            )
-            scored = (
-                veckernel.nearest_candidates(
-                    e.select("vec_id", "v"), "v", "vec_id", cent_rows, n_cand=3
-                )
-                .join(F.broadcast(cents_local), "cluster")
-                .withColumn("d2", V.dist2(F.col("__raw"), F.col("cvec")))
-            )
-        else:
-            scored = (
-                e.select("vec_id", "v")
-                .crossJoin(F.broadcast(cents))
-                .withColumn("d2", V.dist2(F.col("v"), F.col("cvec")))
-            )
+        # E-step as one broadcast fold: with few clusters the whole
+        # n_iters loop stays ONE lazy plan (no per-round collect
+        # barrier, no Python workers) — measured 0.64 s at sf0.1's
+        # 2000×26, where a numpy prune-then-rescore kernel took 4.2 s
+        scored = (
+            e.select("vec_id", "v")
+            .crossJoin(F.broadcast(cents))
+            .withColumn("d2", V.dist2(F.col("v"), F.col("cvec")))
+        )
         w = Window.partitionBy("vec_id").orderBy(
             F.col("d2").asc(), F.col("cluster").asc()
         )
@@ -3398,7 +3359,7 @@ def kmeans_lloyd(
             .filter(F.col("rn") == 1)
             .select("vec_id", "cluster", "d2")
         )
-        if (_it + 1) % checkpoint_every == 0:
+        if (_it + 1) % 3 == 0:
             assign = truncate_lineage(assign)
         else:
             assign = assign.persist()

@@ -1,7 +1,6 @@
 """Similarity-operator quality sanity: the hash machinery must actually
-separate duplicates from non-duplicates, and the two minhash
-implementations (relational explode+agg vs Column-expression fold) must
-agree exactly."""
+separate duplicates from non-duplicates, and exact top-k must keep its
+tie-break and zero-vector contracts."""
 
 from __future__ import annotations
 
@@ -16,33 +15,20 @@ def test_minhash_lsh_separates_dups_from_disjoint(spark):
         (1, "the quick brown fox jumps over the lazy dog again and again"),
         (2, "the quick brown fox jumps over the lazy dog again and again"),
         (3, "completely unrelated words about spark catalyst tungsten arrow"),
+        (4, ""),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     pairs = dedup.minhash_lsh_pairs(
         df, "text", "doc_id", num_hashes=16, bands=4, threshold=0.5, shingle_k=3
     ).collect()
     assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in pairs] == [(1, 2, 1.0)]
-
-
-def test_minhash_implementations_agree(spark):
-    docs = [
-        (1, "alpha beta gamma delta epsilon zeta"),
-        (2, "one two"),
-        (3, ""),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    relational = {
+    # an empty shingle set signs as the 2^31 sentinel in every slot
+    sigs = {
         r["doc_id"]: r["sig"]
-        for r in dedup.minhash_signatures(df, "text", "doc_id", 8, 3).collect()
+        for r in dedup.minhash_signatures(df, "text", "doc_id", 16, 3).collect()
     }
-    fold = {
-        r["doc_id"]: r["sig"]
-        for r in df.select(
-            "doc_id",
-            H.minhash_signature(H.shingles(F.col("text"), 3), 8).alias("sig"),
-        ).collect()
-    }
-    assert relational == fold
+    assert sigs[4] == [2**31] * 16
+    assert sigs[1] == sigs[2] and all(v < 2**31 for v in sigs[3])
 
 
 def test_simhash_hamming_tracks_similarity(spark):
@@ -216,8 +202,7 @@ def test_pq_rerank_shortlist_superset_of_exact_when_full(spark):
     q = df.filter("vec_id < 3")
     exact = {
         (r["query_id"], r["rank"]): r["neighbor_id"]
-        for r in ann_topk_bruteforce(df, q, "v", "vec_id", k=3,
-                                     impl="catalyst").collect()
+        for r in ann_topk_bruteforce(df, q, "v", "vec_id", k=3).collect()
     }
     got = {
         (r["query_id"], r["rank"]): r["neighbor_id"]
@@ -225,6 +210,47 @@ def test_pq_rerank_shortlist_superset_of_exact_when_full(spark):
                                     ks=4, shortlist=1000).collect()
     }
     assert got == exact
+
+
+def test_ann_rounded_tie_break_prefers_low_id(spark):
+    # three corpus vectors with IDENTICAL direction (exact rounded-score
+    # ties) plus distractors: the final ordering is (cosine desc, id
+    # asc), so the tied low ids must win
+    import random
+
+    base = [1.0, 2.0, 3.0, 4.0]
+    rows = [(100, base)]
+    for i, s in [(10, 2.0), (11, 0.5), (12, 4.0)]:
+        rows.append((i, [x * s for x in base]))
+    rng = random.Random(3)
+    distractors = [(i, [rng.uniform(-1.0, 1.0) for _ in range(4)]) for i in range(50)]
+    rows += distractors[20:]  # ids 20..49
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = df.filter(F.col("vec_id") == 100)
+    top = (
+        similarity.ann_topk_bruteforce(df, q, "embedding", "vec_id", k=3)
+        .orderBy("rank")
+        .collect()
+    )
+    assert [r["neighbor_id"] for r in top] == [10, 11, 12]
+    assert all(r["cosine"] == 1.0 for r in top)
+
+
+def test_ann_zero_vectors_and_self_match(spark):
+    rows = [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = df.filter(F.col("vec_id").isin(0, 1))
+    out = similarity.ann_topk_bruteforce(
+        df, q, "embedding", "vec_id", k=4
+    ).collect()
+    by_q = {}
+    for r in out:
+        by_q.setdefault(r["query_id"], []).append(r)
+    # self never appears
+    assert all(r["neighbor_id"] != r["query_id"] for r in out)
+    # zero-vector query scores 0 against everything
+    assert {r["cosine"] for r in by_q[0]} == {0.0}
+    assert len(by_q[0]) == 3 and len(by_q[1]) == 3
 
 
 def test_hard_negatives_excludes_anchor_and_same_label(spark):

@@ -93,14 +93,15 @@ def test_lang_id_ngram_classifies_six_languages(spark):
 
 def test_lang_id_ngram_beats_marker_heuristic_on_morphology(spark):
     # no stopword from LANG_MARKERS appears as a standalone token, so
-    # the marker heuristic has nothing to count — trigram morphology
-    # ("sch", "ich", "cht") still identifies the language.
+    # the marker heuristic (text_metrics' lang_pred) has nothing to
+    # count — trigram morphology ("sch", "ich", "cht") still
+    # identifies the language.
     df = spark.createDataFrame(
         [("Geschichtsschreibung! Wissenschaftliche Nachrichten;",)], "text string"
     )
-    row = df.select(
+    row = T.text_metrics(df).select(
         T.lang_id_ngram(F.col("text")).alias("ng"),
-        T.lang_id(F.col("text")).alias("marker"),
+        F.col("lang_pred").alias("marker"),
     ).first()
     assert row["ng"] == "de"
     assert row["marker"] == "und"
