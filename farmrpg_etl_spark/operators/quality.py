@@ -1694,7 +1694,8 @@ def logit_train_hashed(
     oracle replays the whole trajectory exactly.
 
     ``labels`` must carry one NON-NULL 0/1 ``label_col`` row per
-    document (documents with no feature rows still train the bias).
+    document (documents with no feature rows still train the bias); a
+    document with two label rows raises ``ValueError``.
     Returns ``(step, bucket, w)`` for step 0..rounds, with bucket -1
     carrying the bias.
 
@@ -1725,6 +1726,7 @@ def logit_train_hashed(
         raise ValueError(f"rounds must be a positive int, got {rounds!r}")
     if not (isinstance(eta, (int, float)) and eta > 0):
         raise ValueError(f"eta must be a positive number, got {eta!r}")
+    from farmrpg_etl_spark.operators import dq
     from farmrpg_etl_spark.operators.iterate import truncate_lineage
 
     f = feats.select(
@@ -1736,6 +1738,14 @@ def logit_train_hashed(
         F.col(id_col).alias("__id"),
         F.col(label_col).cast("long").alias("__y"),
     ).localCheckpoint()
+    # a second label row for a document would count it twice in every
+    # gradient (its bias row is one synthetic feature per label row)
+    dup = dq.duplicate_keys(lab, ["__id"]).first()
+    if dup is not None:
+        raise ValueError(
+            f"labels must carry one row per document; {id_col} "
+            f"{dup['__id']!r} has {dup['n']}"
+        )
     nrow = lab.agg(
         F.greatest(F.count(F.lit(1)), F.lit(1).cast("long")).alias("__n")
     ).localCheckpoint()

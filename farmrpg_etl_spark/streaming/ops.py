@@ -33,32 +33,26 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from farmrpg_etl_spark.sources.tables import normalize_timestamps, table_schema
+
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream source over events.parquet with the nano-ts fix.
 
-    Mirrors sources/tables.load_table but as ``readStream`` — the
-    schema is pinned from the batch footer (never inferred), and the
-    raw int64 nanosecond column is cast with exact integer division.
+    The ``readStream`` twin of sources/tables.load_table: the schema is
+    pinned from the table's memoized footer schema (never inferred by
+    the stream) and normalized by the same ``normalize_timestamps``.
     """
     path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path).schema  # ts arrives as long (nanos)
+    ts = table_schema(spark, path)
     # the file stream source requires a directory basePath; point it at
     # sf_dir and glob just this table's file
     sdf = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(ts.raw)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if isinstance(sdf.schema["ts"].dataType, LongType):
-        sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    # micros-NTZ encoding → LTZ, same normalization as load_table (the
-    # watermark/window machinery and oracles are defined over LTZ@UTC)
-    for c, t in sdf.dtypes:
-        if t == "timestamp_ntz":
-            sdf = sdf.withColumn(c, F.col(c).cast("timestamp"))
-    return sdf
+    return normalize_timestamps(sdf, ts)
 
 
 def run_available_now(

@@ -4,7 +4,10 @@ Times registry queries exactly as bench.py's headline block does
 (``bench.timed``: noop sink, cold run then min-of-2 steady;
 ``bench.release`` between rows) and captures ``explain('formatted')``
 for each into plans/<name>_<tag>.txt. Put the round and the side of the
-change in the tag, e.g. ``--tag r19_before``.
+change in the tag, e.g. ``--tag r19_before``. The per-session counters
+in a plan (expression ids ``#<n>``, exchange ``plan_id=<n>``, lambda
+variables ``x_<n>``/``y_<n>``) are masked before it is written, so the
+plans of two tags compare with plain ``diff``.
 
 Usage:
     SPARK_GRAFT_CPUS=32 python scripts/profile_plans.py --tag r19_before q1_pricing_summary ...
@@ -16,14 +19,21 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-os.environ.setdefault("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m")
-
 import bench  # noqa: E402
+
+# counters that differ between two builds of the same query in one session
+_IDS = re.compile(r"(#|plan_id=)\d+")
+_LAMBDA_VARS = re.compile(r"\b([xy])_\d+\b")
+
+
+def mask_counters(plan: str) -> str:
+    return _LAMBDA_VARS.sub(r"\1_<n>", _IDS.sub(r"\1<n>", plan))
 
 
 def main() -> None:
@@ -34,6 +44,7 @@ def main() -> None:
     ap.add_argument("--plan-only", action="store_true")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
+    os.environ.setdefault("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m")
 
     from farmrpg_etl_spark.queries import QUERIES
     from farmrpg_etl_spark.session import get_spark
@@ -72,7 +83,7 @@ def main() -> None:
                 df._jdf.queryExecution(), "formatted"
             )
             with open(os.path.join(plans_dir, f"{name}_{args.tag}.txt"), "w") as f:
-                f.write(plan)
+                f.write(mask_counters(plan))
             bench.release(spark)
 
 

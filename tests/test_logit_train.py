@@ -310,3 +310,22 @@ def test_hashed_train_featureless_doc_trains_bias_exactly(spark):
         (1, -1, 2.0),
         (2, -1, 2.0),
     ]
+
+
+def test_hashed_train_rejects_duplicate_label_rows(spark):
+    # two label rows for one document would square its weight in every
+    # gradient (its synthetic bias row is one per LABEL row)
+    from farmrpg_etl_spark.operators.quality import (
+        hashed_logit_features,
+        logit_train_hashed,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "goodword"), (2, "badword")], "doc_id long, text string"
+    )
+    lab = spark.createDataFrame(
+        [(1, 1), (2, 0), (2, 0)], "doc_id long, y int"
+    )
+    feats = hashed_logit_features(df, "text", "doc_id")
+    with pytest.raises(ValueError, match="one row per document; doc_id 2 has 2"):
+        logit_train_hashed(feats, lab, "doc_id", "y", rounds=1)

@@ -48,7 +48,6 @@ TEST_ONLY_EXEMPT = {
     "bots/commands.py:push_claims",
     "operators/rollup.py:hll_distinct_rollup",
     "operators/curation.py:bpe_vocab_ids",
-    "operators/dq.py:duplicate_keys",
     "sinks/bucketing.py:write_bucketed",
     # exported sink/layout operations of the service-path modules
     # (listed in their ``__all__``)
@@ -105,3 +104,21 @@ def test_every_library_definition_is_used_outside_tests():
     )
     assert unused == []
     assert TEST_ONLY_EXEMPT <= defined.keys()
+
+
+def test_profile_plans_masks_session_counters(monkeypatch):
+    """Two builds of one query in one session differ only in these
+    counters; masked, their plans diff empty."""
+    monkeypatch.syspath_prepend(os.path.join(ROOT, "scripts"))
+    from profile_plans import mask_counters
+
+    plan = (
+        "HashAggregate [keys=[l_returnflag#12], functions=[sum(x#7L)]]\n"
+        "Arguments: hashpartitioning(k#3, 4), ENSURE_REQUIREMENTS, [plan_id=41]\n"
+        "transform(a#5, lambdafunction((x_19 + y_20), x_19, y_20)) AS x_ntok#9"
+    )
+    assert mask_counters(plan) == (
+        "HashAggregate [keys=[l_returnflag#<n>], functions=[sum(x#<n>L)]]\n"
+        "Arguments: hashpartitioning(k#<n>, 4), ENSURE_REQUIREMENTS, [plan_id=<n>]\n"
+        "transform(a#<n>, lambdafunction((x_<n> + y_<n>), x_<n>, y_<n>)) AS x_ntok#<n>"
+    )
