@@ -542,22 +542,16 @@ def sf1_operator_points(spark) -> dict:
             shingle_k=3, threshold=0.5,
         )
 
-    def semdedup(impl):
-        # A/B of the pair-scoring impls: "arrow" generates candidates
-        # with a per-group numpy matmul + exact fold rescore, "catalyst"
-        # is the pure fold self-join. Outputs identical (guard-banded
-        # candidate superset contract). max_cluster_size sits well
-        # below the 10× cluster sizes, so the secondary-LSH skew guard
-        # is ACTUALLY ENGAGED.
-        def fn():
-            clustered = embeddings().select(
-                "vec_id", "embedding", F.col("label").alias("cluster")
-            )
-            return S.semantic_dedup(
-                clustered, "embedding", "vec_id", "cluster", threshold=0.25,
-                max_cluster_size=500, split_dim=64, split_planes=2, impl=impl,
-            )
-        return fn
+    def semdedup():
+        # max_cluster_size sits well below the 10× cluster sizes, so the
+        # secondary-LSH skew guard is ACTUALLY ENGAGED.
+        clustered = embeddings().select(
+            "vec_id", "embedding", F.col("label").alias("cluster")
+        )
+        return S.semantic_dedup(
+            clustered, "embedding", "vec_id", "cluster", threshold=0.25,
+            max_cluster_size=500, split_dim=64, split_planes=2,
+        )
 
     def heavy_hitters():
         from farmrpg_etl_spark.functions import hashing as H
@@ -621,8 +615,7 @@ def sf1_operator_points(spark) -> dict:
     return {
         "minhash_lsh_pairs_10x": minhash,
         "ngram_jaccard_10x": jaccard,
-        "semantic_dedup_guarded_10x": semdedup("arrow"),
-        "semantic_dedup_10x_catalyst": semdedup("catalyst"),
+        "semantic_dedup_guarded_10x": semdedup,
         "heavy_hitters_10x": heavy_hitters,
         "dup_span_10x": dup_span,
         "cut_dup_span_10x": cut_dup_span,

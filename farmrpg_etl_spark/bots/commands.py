@@ -155,74 +155,6 @@ def make_http_reply_sender(fetcher) -> Callable[[int, str, str, str], None]:
     return send
 
 
-def push_claims(
-    changes: DataFrame,
-    fetcher,
-    bearer: str,
-    sent_log: set[tuple] | None = None,
-    uid_col: str = "firebase_uid",
-    order_col: str | None = None,
-) -> int:
-    """K6 over real HTTP — one ``POST v1/accounts:update`` per
-    claims-CHANGE row (reference firebase.py:27-36: JSON body
-    ``{"localId": uid, "customAttributes": json.dumps(claims)}``,
-    Bearer auth). Input is the D5-gated change set
-    (:func:`claims_changes`), which is small by construction — the
-    gate, not this loop, is the scale story; the data path never
-    collects.
-
-    ``accounts:update`` is a STATE-SETTING API, so two properties
-    matter beyond delivery (r11 advice #2):
-
-    * **replay key** — with ``order_col`` (the change event id) the
-      replay log keys on ``(uid, change_id)``, so a legitimate
-      re-transition A→B→A posts the second A instead of being
-      swallowed by a payload-keyed log (at-least-once per CHANGE, as
-      documented). Without ``order_col`` the legacy payload key
-      applies (correct only when the caller pre-reduces to one change
-      per uid).
-    * **per-uid ordering** — rows are sorted by ``(uid, order_col)``
-      before posting, so the receiver's final ``customAttributes`` is
-      the LATEST state, deterministically, even with several changes
-      per uid in one push.
-    """
-    cols = [F.col(uid_col).alias("__uid"), "claims"]
-    if order_col is not None:
-        cols.append(F.col(order_col).alias("__ord"))
-    rows = changes.select(*cols).collect()
-    if order_col is not None:
-        # null-last sentinel sort (r12 advice): a null order value must
-        # not TypeError the whole push — nulls post after ordered rows
-        rows.sort(
-            key=lambda r: (
-                str(r["__uid"]),
-                r["__ord"] is None,
-                0 if r["__ord"] is None else r["__ord"],
-            )
-        )
-    n = 0
-    for r in rows:
-        uid = r["__uid"]
-        key = (
-            (uid, r["__ord"]) if order_col is not None else (uid, r["claims"])
-        )
-        if uid is None or (sent_log is not None and key in sent_log):
-            continue
-        status, resp = fetcher.post(
-            "v1/accounts:update",
-            json_body={"localId": str(uid), "customAttributes": r["claims"]},
-            bearer=bearer,
-        )
-        if status != 200:
-            raise RuntimeError(
-                f"accounts:update failed: status={status} body={resp[:200]!r}"
-            )
-        if sent_log is not None:
-            sent_log.add(key)
-        n += 1
-    return n
-
-
 def push_claims_distributed(
     changes: DataFrame,
     fetcher,
@@ -232,8 +164,10 @@ def push_claims_distributed(
     order_col: str | None = None,
     send_change_id: bool = False,
 ) -> None:
-    """K6 send path for LARGE change sets: ``foreachPartition`` posts
-    each partition's claims from the EXECUTORS (the picklable
+    """K6 send path — one ``POST v1/accounts:update`` per claims-CHANGE
+    row (reference firebase.py:27-36: JSON body ``{"localId": uid,
+    "customAttributes": claims}``, Bearer auth). ``foreachPartition``
+    posts each partition's claims from the EXECUTORS (the picklable
     ``HttpFetcher`` ships like the S4/S7 fan-out fetchers), so
     throughput scales with partitions instead of serializing through
     the driver — measured 82 s for 64k driver-side posts at sf0.1 vs
@@ -241,8 +175,7 @@ def push_claims_distributed(
     Delivery is at-least-once under Spark task retry (same contract
     as the reference's fire-and-forget tasks); the receiving API is
     idempotent per (localId, customAttributes) payload, which is what
-    makes retry safe. Use :func:`push_claims` when a replay log and
-    strict once-per-payload sends matter more than throughput.
+    makes retry safe.
 
     The explicit ``repartition`` matters: the change set is usually
     the tail of a windowed plan that AQE coalesces into ONE tiny

@@ -1,11 +1,11 @@
 """Multimodal column plumbing (north-star extension).
 
-Images / audio / video are opaque ``binary`` columns with typed
-metadata (schemas.MEDIA). The Spark-side plumbing — schema handling,
-Arrow batch shape, ``mapInPandas`` signatures, partitioning — is real
-and tested; the actual codec step is stubbed (image/audio libraries
-are not available in this environment) behind ``_decode_stub``, which
-is a clearly-marked deterministic fake.
+Images / audio / video are opaque ``binary`` columns keyed by
+``media_id`` and typed by ``kind``. The Spark-side plumbing — schema
+handling, Arrow batch shape, ``mapInPandas`` signatures,
+partitioning — is real and tested; the actual codec step is stubbed
+(image/audio libraries are not available in this environment) behind
+``_decode_stub``, which is a clearly-marked deterministic fake.
 
 Scale notes: binary payloads ride in Arrow record batches; keep
 ``spark.sql.files.maxPartitionBytes`` small enough that a partition
@@ -75,7 +75,8 @@ DECODED_SCHEMA = (
 
 
 def decode_media_meta(df: DataFrame) -> DataFrame:
-    """Decode/feature-extract stage over MEDIA rows (stubbed codec)."""
+    """Decode/feature-extract stage over (media_id, kind, data) rows
+    (stubbed codec)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

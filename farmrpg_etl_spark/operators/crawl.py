@@ -114,7 +114,13 @@ def _robots_pairs_expr(body):
             # sequence(0, i) and re-tested the start condition per
             # index, O(lines²) element allocations per body (ADVICE
             # r17: real robots.txt files run to tens of thousands of
-            # lines).
+            # lines). Bound: the count below scans all of ``st`` for
+            # every line, O(lines × groups) per body — linear in lines
+            # while a file has few User-agent groups, quadratic only
+            # when nearly every line starts a group. A prefix sum over
+            # the lines with ``aggregate``/``concat`` is no cheaper in
+            # Catalyst: it copies the accumulator array at each step,
+            # O(lines²) always, and arrays have no binary search.
             starts = F.filter(
                 F.transform(d, lambda x, i: i),
                 lambda j: F.element_at(u, j + 1)

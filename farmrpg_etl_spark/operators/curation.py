@@ -487,13 +487,13 @@ def _bpe_sym_ids(
     df: DataFrame, text_col: str, merge_logs: list[DataFrame]
 ) -> DataFrame:
     """The ONE construction of the tokenizer id table ``(sym,
-    tok_id)`` from a corpus and its merge logs — shared by
-    :func:`bpe_vocab_ids` and :func:`bpe_encode` so the id assignment
-    cannot fork. Base single-character symbols get ids ``0..C-1`` in
-    lexicographic (binary-collation) order; merge round ``r``'s
-    symbol gets id ``C + r - 1`` (merge rank — the standard BPE vocab
-    layout). Two rounds can produce the SAME string (e.g. ``(a,bc)``
-    then ``(ab,c)`` → "abc"); the symbol relation is string-keyed, so
+    tok_id)`` from a corpus and its merge logs, which
+    :func:`bpe_encode` encodes with. Base single-character symbols
+    get ids ``0..C-1`` in lexicographic (binary-collation) order;
+    merge round ``r``'s symbol gets id ``C + r - 1`` (merge rank — the
+    standard BPE vocab layout). Two rounds can produce the SAME string
+    (e.g. ``(a,bc)`` then ``(ab,c)`` → "abc"); the symbol relation is
+    string-keyed, so
     the string keeps its FIRST producer's id (min round) —
     deterministic, and consistent with the string-keyed segmentation
     :func:`_bpe_rounds` computes.
@@ -531,15 +531,6 @@ def _bpe_sym_ids(
         .agg(F.min("tok_id").alias("tok_id"))
     )
     return base_ids.unionByName(merge_ids)
-
-
-def bpe_vocab_ids(
-    df: DataFrame, text_col: str, n_merges: int = 3
-) -> DataFrame:
-    """The trained tokenizer's id table — ``(sym, tok_id)``; see
-    :func:`_bpe_sym_ids` for the layout and determinism argument."""
-    merge_logs, _rows = _bpe_rounds(df, text_col, n_merges, rewrite_last=False)
-    return _bpe_sym_ids(df, text_col, merge_logs)
 
 
 def bpe_encode(

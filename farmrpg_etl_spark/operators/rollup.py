@@ -95,40 +95,6 @@ def salted_sum(
     )
 
 
-def hll_distinct_rollup(
-    df: DataFrame,
-    ts_col: str,
-    keys: Sequence[str],
-    distinct_col: str,
-    fine: str = "minute",
-    coarse: str = "hour",
-    lg_config_k: int = 12,
-) -> DataFrame:
-    """Re-aggregatable DISTINCT counts — the continuous-aggregate
-    pattern for the one aggregate that does not compose exactly:
-    fine buckets store Datasketches HLL sketches
-    (``hll_sketch_agg``), coarser resolutions UNION the stored
-    sketches (``hll_union_agg``) instead of rescanning raw data.
-    Sketch union is exactly associative, so the merged estimate is
-    bit-identical to sketching the coarse bucket directly — pinned by
-    test, not by the DuckDB oracle (sketch internals aren't
-    cross-engine portable; this operator is deliberately outside the
-    oracle surface).
-
-    At 100 TB a per-(bucket, key) sketch is ~2^lg_config_k bytes
-    regardless of cardinality — the rollup table stays
-    dimension-sized while answering "distinct users per any coarser
-    window" without a second fact scan."""
-    fine_b = F.date_trunc(fine, F.col(ts_col)).alias("__fine")
-    partial = df.groupBy(fine_b, *keys).agg(
-        F.hll_sketch_agg(F.col(distinct_col), F.lit(lg_config_k)).alias("__sk")
-    )
-    coarse_b = F.date_trunc(coarse, F.col("__fine")).alias("bucket")
-    return partial.groupBy(coarse_b, *keys).agg(
-        F.hll_sketch_estimate(F.hll_union_agg(F.col("__sk"))).alias("approx_distinct")
-    )
-
-
 def histogram_sketch(
     df: DataFrame,
     ts_col: str,
@@ -141,9 +107,9 @@ def histogram_sketch(
     ``bucket = floor(value / width)``. Counts compose exactly under
     addition, so coarser resolutions merge stored partials
     (:func:`merge_histograms`) instead of rescanning raw data —
-    same continuous-aggregate pattern as :func:`hll_distinct_rollup`
-    but for quantiles, and (unlike HLL internals) the representation
-    is portable integers, so the whole path is oracle-checkable.
+    the continuous-aggregate pattern for quantiles; the
+    representation is portable integers, so the whole path is
+    oracle-checkable.
 
     At 100 TB the sketch per (time bucket) is ≤ value_range/width
     rows of two longs — the rollup table is bounded by bucket count,

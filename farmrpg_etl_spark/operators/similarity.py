@@ -738,7 +738,7 @@ def _semantic_dedup_keyed(
 ) -> DataFrame:
     """Normalized (id, __cl, __v, __key) relation for semantic_dedup.
 
-    ``__key`` is the self-join key: the cluster id alone for bounded
+    ``__key`` is the pair-grouping key: the cluster id alone for bounded
     clusters, the cluster id composed with ``split_planes``
     CLUSTER-CENTERED projection bits for clusters larger than
     ``max_cluster_size`` — the in-code skew guard.
@@ -823,41 +823,39 @@ def semantic_dedup(
     max_cluster_size: int | None = None,
     split_dim: int | None = None,
     split_planes: int = 2,
-    impl: str = "arrow",
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate removal: within each
     cluster, a vector is a duplicate if ANY lower-id vector in the same
     cluster has cosine similarity ≥ ``threshold``; survivors are
     returned as ``(id, cluster)``.
 
-    ``impl="arrow"`` (default) generates candidate pairs with a
-    per-group numpy matmul (``applyInPandas`` keyed on the same
-    ``__key`` the self-join would shuffle on — shuffle parity, one
-    side instead of two) using a guard-banded cutoff
-    ``threshold − 1e-4``, then re-scores ONLY the candidates with the
-    exact Catalyst fold on the exact same double inputs (unit vectors
-    computed JVM-side, Arrow-roundtripped losslessly). numpy's matmul
-    differs from the fold by ≲ d·ulp ≈ 1e-13 ≪ the guard band, so no
-    true pair can be missed and the emitted decisions are identical to
-    ``impl="catalyst"`` — both hash-match the DuckDB oracle. Measured
-    motivation: interpreted fold dots are the Σ|group|² hot loop
-    (~4% of pairs pass the threshold here, so ~96% of fold cost buys
-    nothing); the kernel pays one matmul per group and folds only the
-    survivors. The score matrix is computed in 1024-row blocks, so
-    peak kernel memory is 1024·|group| doubles regardless of group
-    size (the ``max_cluster_size`` guard bounds |group| anyway).
-    ``impl="catalyst"`` keeps the UDF-free single-plan self-join as
-    the oracle-parity reference.
+    Candidate pairs come from a per-group numpy matmul
+    (``applyInPandas`` keyed on ``__key``, one shuffle of one side)
+    with a guard-banded cutoff ``threshold − 1e-4``; ONLY the
+    candidates are then re-scored with the exact Catalyst fold on the
+    same double inputs (unit vectors computed JVM-side,
+    Arrow-roundtripped losslessly). numpy's matmul differs from the
+    fold by ≲ d·ulp ≈ 1e-13 ≪ the guard band, so no true pair can be
+    missed and the decisions are those of a pure-fold self-join on
+    ``__key`` — which hash-matches the DuckDB oracle. Interpreted fold
+    dots over every pair are the Σ|group|² hot loop (~4% of pairs pass
+    the threshold here, so ~96% of fold cost buys nothing); the kernel
+    pays one matmul per group and folds only the survivors. Measured
+    against that self-join (``docs/SCALE.md``): 6.0 vs 12.6 s for
+    ``training_data_pipeline_v2`` at sf0.1, 2.75 vs 7.07 s at 10×
+    corpus. The score matrix is computed in 1024-row blocks, so peak
+    kernel memory is 1024·|group| doubles regardless of group size
+    (the ``max_cluster_size`` guard bounds |group| anyway).
 
     The "any lower id" rule (rather than "any lower KEPT id") makes the
-    operator a single self-join + anti-join — no iteration — and is
+    operator one candidate pass + anti-join — no iteration — and is
     deterministic under any partitioning. It removes a superset of the
     greedy chain rule (a→b→c chains drop both b and c even when a↔c
     alone is below threshold), which is the standard SemDeDup
     simplification.
 
-    Scale: the self-join shuffles once on the join key; each side
-    carries only (id, key, vector) — fixed-width rows, never documents.
+    Scale: the candidate pass shuffles once on the key and carries only
+    (id, key, vector) — fixed-width rows, never documents.
     Pair cost is Σ|group|², bounded two ways: choose k ≈ n/√c clusters
     upstream (k-means E-step is a broadcast map, see
     ``queries.kmeans_assign_embeddings``), and set ``max_cluster_size``
@@ -870,45 +868,28 @@ def semantic_dedup(
     pairs SemDeDup cares about — agree on sign-LSH bits with high
     probability; distant same-cluster pairs may be missed). The size
     count is a window over the same cluster shuffle, not a second scan.
-    All math is Catalyst fold expressions — JVM-side, no UDF.
     """
     keyed = _semantic_dedup_keyed(
         clustered, vec_col, id_col, cluster_col,
         max_cluster_size, split_dim, split_planes,
     )
-    # normalize ONCE per row: the Σ|group|² self-join then pays a single
-    # interpreted dot fold per pair instead of dot + two norms (~3×)
+    # normalize ONCE per row: the rescore then pays a single dot fold
+    # per candidate instead of dot + two norms (~3×)
     n = keyed.withColumn("__nrm", V.norm(F.col("__v"))).select(
         F.col(id_col),
         "__cl",
         "__key",
         V.unit(F.col("__v"), F.col("__nrm")).alias("__u"),
     )
-    if impl == "arrow":
-        cand = _semantic_candidates_arrow(n, id_col, threshold - 1e-4)
-        dups = (
-            cand.withColumn(
-                "__cos", F.round(V.dot(F.col("__ua"), F.col("__ub")), 6)
-            )
-            .filter(F.col("__cos") >= F.lit(threshold))
-            .select(F.col("__idb").alias(id_col))
-            .distinct()
+    cand = _semantic_candidates_arrow(n, id_col, threshold - 1e-4)
+    dups = (
+        cand.withColumn(
+            "__cos", F.round(V.dot(F.col("__ua"), F.col("__ub")), 6)
         )
-    else:
-        a, b = n.alias("a"), n.alias("b")
-        dups = (
-            a.join(
-                b,
-                (F.col("a.__key") == F.col("b.__key"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .withColumn(
-                "__cos", F.round(V.dot(F.col("a.__u"), F.col("b.__u")), 6)
-            )
-            .filter(F.col("__cos") >= F.lit(threshold))
-            .select(F.col(f"b.{id_col}").alias(id_col))
-            .distinct()
-        )
+        .filter(F.col("__cos") >= F.lit(threshold))
+        .select(F.col("__idb").alias(id_col))
+        .distinct()
+    )
     return n.join(dups, id_col, "left_anti").select(
         F.col(id_col), F.col("__cl").alias(cluster_col)
     )
@@ -925,7 +906,7 @@ def _semantic_candidates_arrow(
     the true ≥ threshold pairs; the caller re-scores with the exact
     fold. The unit vectors ride through the kernel untouched (Arrow
     preserves doubles bit-exactly), so the rescore sees the same
-    inputs the pure-Catalyst plan would."""
+    inputs a pure-Catalyst self-join would."""
     import numpy as np
     import pandas as pd
 

@@ -6,21 +6,16 @@ file. Interleaving the bits of two columns into one Morton key and
 sorting by it bounds BOTH columns per file (each file covers a small
 rectangle of the 2-D key space), so conjunctive or single-column range
 predicates on either dimension skip most files — the standard
-Delta/Iceberg `OPTIMIZE ZORDER BY` layout, expressed here as pure
-Catalyst bit arithmetic plus a range-partitioned sorted write.
-
-At 100 TB this is a layout investment like bucketing
-(`sinks/bucketing.py`): one range shuffle at write time, amortized by
-every subsequent selective scan. The z-value itself is 2·bits OR/shift
-terms — whole-stage codegen, no UDF.
+Delta/Iceberg `OPTIMIZE ZORDER BY` layout. The key is pure Catalyst
+bit arithmetic: 2·bits OR/shift terms, whole-stage codegen, no UDF.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["zvalue", "zorder_write"]
+__all__ = ["zvalue"]
 
 
 def zvalue(a: Column, b: Column, bits: int = 16) -> Column:
@@ -34,27 +29,3 @@ def zvalue(a: Column, b: Column, bits: int = 16) -> Column:
         z = z.bitwiseOR(F.shiftleft(F.shiftright(b.cast("long"), i) % 2, 2 * i + 1))
     return z
 
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    *,
-    bits: int = 16,
-    num_files: int = 16,
-) -> None:
-    """Write ``df`` z-ordered by (``col_a``, ``col_b``): range-partition
-    on the Morton key (so files tile the z-curve in disjoint runs) and
-    sort within each file (so row-group stats are tight inside files
-    too). Both columns must already be non-negative integers below
-    2^``bits``."""
-    z = zvalue(F.col(col_a), F.col(col_b), bits)
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -984,8 +984,6 @@ SELECT media_id, kind, n_bytes,
 FROM d
 """
 
-_COS = "CASE WHEN a.nrm * b.nrm = 0.0 THEN 0.0 ELSE ({dot}) / (a.nrm * b.nrm) END"
-
 ORACLES["cosine_pairs_embeddings"] = f"""
 WITH {_EMB}
 SELECT id_a, id_b, cosine FROM (

@@ -48,8 +48,6 @@ SOURCE_FIELDS: dict[str, str] = {
     "message": "id long, username string, ts timestamp, subject string, content string",
 }
 
-ERROR_FIELDS = "source string, key string, fetch_ts timestamp, error string"
-
 
 def _dispatch(source: str) -> Callable[[str, bytes, Any], list[dict]]:
     if source == "chat":

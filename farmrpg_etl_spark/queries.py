@@ -1599,7 +1599,7 @@ def training_data_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     evalv = pooled_vecs(scored.filter(F.col("doc_id") < 250))
 
     surv = similarity.semantic_dedup(
-        train, "pooled_vec", "doc_id", "cluster", threshold=0.9, impl="catalyst"
+        train, "pooled_vec", "doc_id", "cluster", threshold=0.9
     )
     surv_full = surv.join(train, ["doc_id", "cluster"])
     cont = similarity.celled_contamination(
@@ -2242,7 +2242,7 @@ def salted_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def zorder_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton (z-order) keys over (user_id, floor(value)) — the
-    multi-column clustering key behind ``zorder_write`` — summarized
+    multi-column clustering key of a z-ordered layout — summarized
     per 256-bucket z-range with exact-integer stats."""
     from farmrpg_etl_spark.operators import zorder
 
@@ -4116,8 +4116,7 @@ def pooled_semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFr
         "cluster", similarity.lsh_block(F.col("pooled_vec"), 64, 2)
     ).persist()
     return similarity.semantic_dedup(
-        blocked, "pooled_vec", "group_id", "cluster",
-        threshold=0.25, impl="catalyst",
+        blocked, "pooled_vec", "group_id", "cluster", threshold=0.25,
     )
 
 

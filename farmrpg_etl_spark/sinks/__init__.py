@@ -1,9 +1,8 @@
-"""MERGE-shaped, replay-idempotent sink writers (SURVEY §2.8 K1-K8)."""
+"""MERGE-shaped, replay-idempotent sink writers (SURVEY §2.8 K1-K5)."""
 
 from farmrpg_etl_spark.sinks.writers import (  # noqa: F401
     ParquetTable,
     append_snapshots_with_noop_elimination,
-    console_sink,
     insert_if_absent,
     merge_update,
     partial_document_update,

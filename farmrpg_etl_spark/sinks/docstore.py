@@ -40,7 +40,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["DocStoreSpec", "ensure_store", "set_docs", "ensure_docs", "read_docs"]
+__all__ = ["DocStoreSpec", "ensure_store", "set_docs", "read_docs"]
 
 _BATCH = 1000
 
@@ -116,22 +116,6 @@ def set_docs(df: DataFrame, spec: DocStoreSpec, *, merge: bool) -> None:
         f"INSERT INTO {spec.table} (collection, doc_id, doc) "
         f"VALUES (?, ?, json(?)) "
         f"ON CONFLICT (collection, doc_id) {conflict}"
-    )
-    _write_docs(df, spec.db_path, sql)
-
-
-def ensure_docs(df: DataFrame, spec: DocStoreSpec) -> None:
-    """Create-if-absent (reference firestore/chat.py:52-57: the room
-    parent doc is ``set({"id": room})`` exactly once, guarded by the
-    process-local ``room_docs`` cache). Here the ENGINE is the guard —
-    ``INSERT OR IGNORE`` on the (collection, doc_id) primary key — so
-    the idempotence survives process restarts and concurrent writers,
-    which the reference's in-memory set does not. Same partitioned
-    writer shape as :func:`set_docs`."""
-    ensure_store(spec)
-    sql = (
-        f"INSERT OR IGNORE INTO {spec.table} (collection, doc_id, doc) "
-        f"VALUES (?, ?, json(?))"
     )
     _write_docs(df, spec.db_path, sql)
 

@@ -1,4 +1,4 @@
-"""Real external-SQL-database sink/source (SURVEY §2.8, K1-K4 against
+"""Real external-SQL-database sink/source (SURVEY §2.8, K1-K3 against
 a live DB engine).
 
 The reference persists through an ORM over a live SQL database —
@@ -16,7 +16,7 @@ is the Spark-idiomatic version of that connector, using stdlib
 - **Exactly-once over at-least-once**: Spark may re-run a failed
   task; every write shape here is idempotent under replay — K1 is
   INSERT OR IGNORE on the unique key (re-running inserts nothing),
-  K2/K3/K4 set key-determined values (re-running sets the same
+  K2/K3 set key-determined values (re-running sets the same
   values). Same argument the reference gets from its unique index.
 - **Reads** are rowid-range partitioned ``mapInPandas`` — the JDBC
   ``partitionColumn/lowerBound/upperBound/numPartitions`` source
@@ -54,7 +54,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = ["SqlTableSpec", "ensure_table", "insert_absent", "correlated_update",
-           "upsert", "partial_doc_update", "read_table"]
+           "upsert", "read_table"]
 
 _BATCH = 1000
 
@@ -223,27 +223,6 @@ def upsert(df: DataFrame, spec: SqlTableSpec) -> None:
         f"VALUES ({', '.join('?' * len(cols))}) "
         f"ON CONFLICT ({', '.join(spec.key)}) DO UPDATE SET "
         + ", ".join(f"{c} = excluded.{c}" for c in non_key)
-    )
-    db = spec.db_path
-    df.select(*cols).foreachPartition(
-        lambda it: _run_partition(db, sql, it, cols)
-    )
-
-
-def partial_doc_update(df: DataFrame, spec: SqlTableSpec) -> None:
-    """K4 — partial-document write: NULL incoming fields do NOT
-    clobber existing values (the Firestore merge-update semantics,
-    firestore/chat.py:57-66, over a SQL engine: COALESCE(excluded,
-    current))."""
-    ensure_table(spec)
-    cols = spec.columns
-    non_key = [c for c in cols if c not in spec.key]
-    sql = (
-        f"INSERT INTO {spec.table} ({', '.join(cols)}) "
-        f"VALUES ({', '.join('?' * len(cols))}) "
-        f"ON CONFLICT ({', '.join(spec.key)}) DO UPDATE SET "
-        + ", ".join(f"{c} = COALESCE(excluded.{c}, {spec.table}.{c})"
-                    for c in non_key)
     )
     db = spec.db_path
     df.select(*cols).foreachPartition(

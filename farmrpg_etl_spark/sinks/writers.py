@@ -1,4 +1,4 @@
-"""MERGE-shaped batch sink writers (SURVEY §2.8, K1-K8).
+"""MERGE-shaped batch sink writers (SURVEY §2.8, K1-K4).
 
 The reference leans on Postgres unique indexes + swallowed violations
 (db/chat.py:13-19), correlated UPDATEs (db/chat.py:22-26), an
@@ -623,11 +623,6 @@ def partial_document_update(
         else:
             cols.append(F.col(c))  # never clobbered (e.g. flags, K4)
     table._commit(joined.select(*cols), batch_id, writer)
-
-
-def console_sink(batch: DataFrame, n: int = 20) -> None:
-    """K8 — debug console sink (reference __main__.py:37-50)."""
-    batch.show(n, truncate=False)
 
 
 def merge_additive_aggregates(

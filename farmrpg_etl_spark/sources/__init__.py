@@ -1,3 +1,3 @@
-from farmrpg_etl_spark.sources.tables import load_table, load_tables
+from farmrpg_etl_spark.sources.tables import load_table
 
-__all__ = ["load_table", "load_tables"]
+__all__ = ["load_table"]

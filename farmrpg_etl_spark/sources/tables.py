@@ -40,8 +40,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
-from farmrpg_etl_spark.schemas import TESTDATA_TABLES
-
 
 class TableSchema(NamedTuple):
     """What a table's files tell Spark. ``raw`` is the schema Spark
@@ -145,7 +143,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     ts = table_schema(spark, path)
     return normalize_timestamps(spark.read.schema(ts.raw).parquet(path), ts)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}

@@ -81,39 +81,3 @@ def test_sketches_are_partial_aggregatable(spark, events):
         F.approx_count_distinct("user_id", rsd=0.02).alias("n")
     ).first().n
     assert a == b
-
-
-def test_hll_distinct_rollup_merge_equals_direct(spark):
-    """Sketch union is associative: hour estimates from merged minute
-    sketches must be identical to sketching hours directly, and exact
-    at these cardinalities."""
-    from pyspark.sql import functions as F
-
-    from farmrpg_etl_spark.operators.rollup import hll_distinct_rollup
-    from farmrpg_etl_spark.sources.tables import load_table
-
-    e = load_table(spark, "/root/testdata/sf0.001", "events")
-    key = ["event_type"]
-    merged = hll_distinct_rollup(e, "ts", key, "user_id").orderBy(
-        "bucket", "event_type"
-    )
-    hour = F.date_trunc("hour", F.col("ts")).alias("bucket")
-    direct = (
-        e.groupBy(hour, *key)
-        .agg(
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg(F.col("user_id"), F.lit(12))
-            ).alias("approx_distinct")
-        )
-        .orderBy("bucket", "event_type")
-    )
-    exact = (
-        e.groupBy(hour, *key)
-        .agg(F.countDistinct("user_id").alias("d"))
-        .orderBy("bucket", "event_type")
-    )
-    m, d, x = merged.collect(), direct.collect(), exact.collect()
-    assert len(m) == len(d) == len(x) > 0
-    assert [r["approx_distinct"] for r in m] == [r["approx_distinct"] for r in d]
-    for a, b in zip(m, x):
-        assert abs(a["approx_distinct"] - b["d"]) <= max(0.05 * b["d"], 2)

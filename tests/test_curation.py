@@ -246,9 +246,10 @@ def test_bpe_encode_ids_and_layout(spark):
         [(1, "low lower lowest"), (2, "low low new"), (3, None), (4, "")],
         "doc_id long, text string",
     )
+    merge_logs = curation._bpe_rounds(df, "text", 3, rewrite_last=False)[0]
     vocab = {
         r["sym"]: r["tok_id"]
-        for r in curation.bpe_vocab_ids(df, "text", 3).collect()
+        for r in curation._bpe_sym_ids(df, "text", merge_logs).collect()
     }
     # base alphabet: e l n o r s t w -> 0..7; merges lo, low, lowe
     assert vocab == {

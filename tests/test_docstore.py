@@ -138,31 +138,3 @@ def test_prefix_read_selects_subtree(spark, tmp_path):
         ("rooms/r/chats/2/mod", "flags"),
     }
     assert len(_docs(spark, spec)) == 3
-
-
-def test_ensure_docs_create_if_absent(spark, tmp_path):
-    """The room-parent-doc contract (reference firestore/chat.py:52-57):
-    create once, never overwrite — engine-guarded, so it survives
-    restarts unlike the reference's in-memory room_docs set."""
-    from farmrpg_etl_spark.sinks.docstore import ensure_docs
-
-    spec = _spec(tmp_path)
-    set_docs(
-        spark.createDataFrame([("rooms", "r1", '{"id": "r1", "topic": "x"}')], SCHEMA),
-        spec,
-        merge=False,
-    )
-    ensure_docs(
-        spark.createDataFrame(
-            [("rooms", "r1", '{"id": "r1"}'), ("rooms", "r2", '{"id": "r2"}')],
-            SCHEMA,
-        ),
-        spec,
-    )
-    got = _docs(spark, spec)
-    assert got[("rooms", "r1")] == {"id": "r1", "topic": "x"}  # untouched
-    assert got[("rooms", "r2")] == {"id": "r2"}  # created
-    ensure_docs(  # replay: no-op
-        spark.createDataFrame([("rooms", "r2", '{"id": "zzz"}')], SCHEMA), spec
-    )
-    assert _docs(spark, spec)[("rooms", "r2")] == {"id": "r2"}

@@ -215,14 +215,13 @@ def test_post_accounts_update_json_bearer(spark, site):
     """K6 real send path: JSON POST v1/accounts:update with Bearer auth
     (reference firebase.py:27-36); payload is localId + the claims doc
     as a JSON string in customAttributes."""
-    from farmrpg_etl_spark.bots.commands import push_claims
+    from farmrpg_etl_spark.bots.commands import push_claims_distributed
 
     changes = spark.createDataFrame(
         [("UID7", '{"farmhand":"true","ranger":"false"}')],
         "firebase_uid string, claims string",
     )
-    n = push_claims(changes, HttpFetcher(_cfg(site)), bearer="tok-123")
-    assert n == 1
+    push_claims_distributed(changes, HttpFetcher(_cfg(site)), bearer="tok-123")
     with site.lock:
         posts = [s for s in site.seen if s["path"] == "/v1/accounts:update"]
     assert len(posts) == 1
@@ -236,71 +235,15 @@ def test_post_accounts_update_json_bearer(spark, site):
 
 
 def test_post_accounts_update_missing_bearer_401(spark, site):
-    from farmrpg_etl_spark.bots.commands import push_claims
+    """A non-200 fails the sending task, and the error reaches the
+    driver with the status in it."""
+    from farmrpg_etl_spark.bots.commands import push_claims_distributed
 
     changes = spark.createDataFrame(
         [("UID7", "{}")], "firebase_uid string, claims string"
     )
-    with pytest.raises(RuntimeError, match="accounts:update failed: status=401"):
-        push_claims(changes, HttpFetcher(_cfg(site)), bearer="")
-
-
-def test_push_claims_order_col_retransition_replay_key(spark, site):
-    """K6 with order_col (the change event id): the replay log keys on
-    (uid, change_id), so a legitimate A->B->A re-transition posts the
-    second A instead of being swallowed by a payload-keyed log — and
-    the posts arrive in per-uid change order (r12 build, verified
-    r13)."""
-    from farmrpg_etl_spark.bots.commands import push_claims
-
-    a = '{"farmhand":"true","ranger":"false"}'
-    b = '{"farmhand":"false","ranger":"false"}'
-    # deliberately shuffled input order: the sort must restore it
-    changes = spark.createDataFrame(
-        [("UID7", b, 20), ("UID7", a, 30), ("UID7", a, 10)],
-        "firebase_uid string, claims string, event_id int",
-    )
-    log: set = set()
-    n = push_claims(
-        changes, HttpFetcher(_cfg(site)), bearer="tok",
-        sent_log=log, order_col="event_id",
-    )
-    assert n == 3  # the A->B->A second A is NOT deduped away
-    with site.lock:
-        posts = [
-            s["form"]["customAttributes"]
-            for s in site.seen
-            if s["path"] == "/v1/accounts:update"
-        ]
-    assert posts == [a, b, a]  # per-uid change order; final state = A
-    # replay: identical second push sends nothing
-    n2 = push_claims(
-        changes, HttpFetcher(_cfg(site)), bearer="tok",
-        sent_log=log, order_col="event_id",
-    )
-    assert n2 == 0
-
-
-def test_push_claims_null_order_value_sorts_last(spark, site):
-    """A null order value must not TypeError the whole push (r12
-    advice #2): null-ord rows sort after ordered rows and still post."""
-    from farmrpg_etl_spark.bots.commands import push_claims
-
-    changes = spark.createDataFrame(
-        [("UID1", "{}", None), ("UID1", '{"x":"1"}', 5)],
-        "firebase_uid string, claims string, event_id int",
-    )
-    n = push_claims(
-        changes, HttpFetcher(_cfg(site)), bearer="tok", order_col="event_id"
-    )
-    assert n == 2
-    with site.lock:
-        posts = [
-            s["form"]["customAttributes"]
-            for s in site.seen
-            if s["path"] == "/v1/accounts:update"
-        ]
-    assert posts == ['{"x":"1"}', "{}"]  # ordered first, null last
+    with pytest.raises(Exception, match="accounts:update failed: status=401"):
+        push_claims_distributed(changes, HttpFetcher(_cfg(site)), bearer="")
 
 
 def test_push_claims_distributed_per_uid_order_and_nonce(spark, site):
@@ -339,6 +282,28 @@ def test_push_claims_distributed_per_uid_order_and_nonce(spark, site):
         assert got == [
             ('{"v":"%d"}' % e, str(u * 100 + e)) for e in (1, 2, 3)
         ]
+
+
+def test_push_claims_distributed_null_order_value_posts_without_nonce(spark, site):
+    """A null order value must not fail the push: its row still posts,
+    and carries no changeId (never the string "None")."""
+    from farmrpg_etl_spark.bots.commands import push_claims_distributed
+
+    changes = spark.createDataFrame(
+        [("UID1", "{}", None), ("UID1", '{"x":"1"}', 5)],
+        "firebase_uid string, claims string, event_id int",
+    )
+    push_claims_distributed(
+        changes, HttpFetcher(_cfg(site)), bearer="tok",
+        parallelism=2, order_col="event_id", send_change_id=True,
+    )
+    with site.lock:
+        posts = sorted(
+            (s["form"]["customAttributes"], s["query"].get("changeId"))
+            for s in site.seen
+            if s["path"] == "/v1/accounts:update"
+        )
+    assert posts == [('{"x":"1"}', "5"), ("{}", None)]
 
 
 def test_push_claims_distributed_no_nonce_by_default(spark, site):

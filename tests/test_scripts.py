@@ -42,21 +42,6 @@ def test_import_bench_loads_no_pyspark():
     assert out.stdout.strip() == "[]"
 
 
-# Single-implementation capabilities that only tests call today; each is
-# the one form of its operator, kept as library surface.
-TEST_ONLY_EXEMPT = {
-    "bots/commands.py:push_claims",
-    "operators/rollup.py:hll_distinct_rollup",
-    "operators/curation.py:bpe_vocab_ids",
-    "sinks/bucketing.py:write_bucketed",
-    # exported sink/layout operations of the service-path modules
-    # (listed in their ``__all__``)
-    "sinks/docstore.py:ensure_docs",
-    "sinks/sqldb.py:partial_doc_update",
-    "operators/zorder.py:zorder_write",
-}
-
-
 def _py_files(top, skip=()):
     for d, dirs, files in os.walk(top):
         dirs[:] = [
@@ -66,44 +51,95 @@ def _py_files(top, skip=()):
         yield from (os.path.join(d, f) for f in files if f.endswith(".py"))
 
 
-def test_every_library_definition_is_used_outside_tests():
-    """Every top-level function and class in ``farmrpg_etl_spark/``
-    must be referenced by an AST name (a load, an attribute or an
-    import) somewhere outside ``tests/`` and ``perfbench/tests/``. A
-    second form of an operator that only its own tests run fails here;
-    docstring mentions do not count. The vendored protobuf runtime is
-    third-party code and is not scanned. Matching is by bare name, so
-    the check can miss dead code whose name is reused, never the
-    other way round."""
-    pkg = os.path.join(ROOT, "farmrpg_etl_spark")
+def _top_level_names(node):
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    targets = (
+        node.targets if isinstance(node, ast.Assign)
+        else [node.target] if isinstance(node, ast.AnnAssign)
+        else []
+    )
+    return [
+        n.id for t in targets for n in ast.walk(t)
+        if isinstance(n, ast.Name)
+        and not (n.id.startswith("__") and n.id.endswith("__"))
+    ]
+
+
+def dead_library_names(root):
+    """``<path>:<name>`` for every top-level function, class or
+    assigned name (dunders excepted) in ``<root>/farmrpg_etl_spark/``
+    that no code outside ``tests/`` and ``perfbench/tests/`` reads:
+    a load, an attribute or an import. A package ``__init__.py``
+    importing a name is a re-export, not a use. Matching is by bare
+    name, so the scan can miss dead code whose name is reused, never
+    the other way round. The vendored protobuf runtime is third-party
+    code and is not scanned."""
+    pkg = os.path.join(root, "farmrpg_etl_spark")
     defined = {}
     for path in _py_files(pkg, skip={os.path.join(pkg, "vendor")}):
         with open(path) as f:
             body = ast.parse(f.read()).body
         rel = os.path.relpath(path, pkg)
         for node in body:
-            if isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ):
-                defined[f"{rel}:{node.name}"] = node.name
+            for name in _top_level_names(node):
+                defined[f"{rel}:{name}"] = name
     used = set()
-    skip = {os.path.join(ROOT, "tests"), os.path.join(ROOT, "perfbench", "tests")}
-    for path in _py_files(ROOT, skip):
+    skip = {os.path.join(root, "tests"), os.path.join(root, "perfbench", "tests")}
+    for path in _py_files(root, skip):
+        reexport = (
+            os.path.basename(path) == "__init__.py"
+            and os.path.commonpath([path, pkg]) == pkg
+        )
         with open(path) as f:
             tree = ast.parse(f.read())
         for node in ast.walk(tree):
-            if isinstance(node, ast.Name):
+            if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
                 used.add(node.id)
             elif isinstance(node, ast.Attribute):
                 used.add(node.attr)
-            elif isinstance(node, ast.alias):
+            elif isinstance(node, ast.alias) and not reexport:
                 used.add(node.name.rsplit(".", 1)[-1])
-    unused = sorted(
-        key for key, name in defined.items()
-        if name not in used and key not in TEST_ONLY_EXEMPT
-    )
-    assert unused == []
-    assert TEST_ONLY_EXEMPT <= defined.keys()
+    return sorted(key for key, name in defined.items() if name not in used)
+
+
+def test_every_library_definition_is_used_outside_tests():
+    """A second form of an operator that only its own tests run, a
+    constant nothing reads, or a function only a package re-exports
+    fails here; docstring mentions do not count."""
+    assert dead_library_names(ROOT) == []
+
+
+def test_dead_name_scan_reports_each_kind(tmp_path):
+    """The three kinds of dead name: reached only by a test, only by
+    a package re-export, or never read. Names that code reads, in
+    their own module or elsewhere, are not reported."""
+    files = {
+        "farmrpg_etl_spark/__init__.py": "",
+        "farmrpg_etl_spark/ops.py": (
+            "__all__ = ['reexported']\n"
+            "LIMIT = 3\n"
+            "UNREAD = 4\n"
+            "def only_tested(): return LIMIT\n"
+            "def reexported(): pass\n"
+            "def run(): pass\n"
+        ),
+        "farmrpg_etl_spark/sub/__init__.py": (
+            "from farmrpg_etl_spark.ops import reexported\n"
+        ),
+        "farmrpg_etl_spark/vendor/lib.py": "def third_party(): pass\n",
+        "app.py": "from farmrpg_etl_spark import ops\nops.run()\n",
+        "tests/test_ops.py": (
+            "from farmrpg_etl_spark.ops import UNREAD, only_tested, reexported\n"
+        ),
+    }
+    for rel, text in files.items():
+        path = tmp_path / rel
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_text(text)
+    assert dead_library_names(str(tmp_path)) == [
+        "ops.py:UNREAD", "ops.py:only_tested", "ops.py:reexported",
+    ]
 
 
 def test_profile_plans_masks_session_counters(monkeypatch):

@@ -204,6 +204,35 @@ def test_kmeans_lloyd_inertia_monotone(spark):
     assert inertias[2] < inertias[0] * 0.9
 
 
+def _fold_self_join_dedup(clustered, threshold, max_cluster_size, split_dim):
+    """The UDF-free reference for ``semantic_dedup``: every in-key pair
+    scored by the Catalyst fold in one self-join."""
+    from farmrpg_etl_spark.functions import vectors as V
+
+    keyed = similarity._semantic_dedup_keyed(
+        clustered, "embedding", "vec_id", "cluster",
+        max_cluster_size, split_dim, 2,
+    )
+    n = keyed.withColumn("__nrm", V.norm(F.col("__v"))).select(
+        "vec_id", "__cl", "__key",
+        V.unit(F.col("__v"), F.col("__nrm")).alias("__u"),
+    )
+    a, b = n.alias("a"), n.alias("b")
+    dups = (
+        a.join(
+            b,
+            (F.col("a.__key") == F.col("b.__key"))
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
+        )
+        .filter(F.round(V.dot(F.col("a.__u"), F.col("b.__u")), 6) >= threshold)
+        .select(F.col("b.vec_id").alias("vec_id"))
+        .distinct()
+    )
+    return n.join(dups, "vec_id", "left_anti").select(
+        "vec_id", F.col("__cl").alias("cluster")
+    )
+
+
 def test_semantic_dedup_arrow_matches_catalyst_impl(spark):
     # the guard-banded numpy candidate generator must reproduce the
     # pure-fold self-join decisions exactly — on the real embeddings
@@ -211,13 +240,11 @@ def test_semantic_dedup_arrow_matches_catalyst_impl(spark):
     e = load_table(spark, SF, "embeddings").select(
         "vec_id", "embedding", F.col("label").alias("cluster")
     )
-    kw = dict(threshold=0.25, max_cluster_size=30, split_dim=64)
+    kw = dict(max_cluster_size=30, split_dim=64)
     arrow = similarity.semantic_dedup(
-        e, "embedding", "vec_id", "cluster", impl="arrow", **kw
+        e, "embedding", "vec_id", "cluster", threshold=0.25, **kw
     )
-    catalyst = similarity.semantic_dedup(
-        e, "embedding", "vec_id", "cluster", impl="catalyst", **kw
-    )
+    catalyst = _fold_self_join_dedup(e, 0.25, **kw)
     a = {(r.vec_id, r.cluster) for r in arrow.collect()}
     c = {(r.vec_id, r.cluster) for r in catalyst.collect()}
     assert a == c and len(a) > 0

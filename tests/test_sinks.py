@@ -210,14 +210,6 @@ def test_streaming_incremental_rollup_foreachbatch(spark, tmp_path):
     assert got == {"u1": (2, 11), "u2": (1, 5), "u3": (1, 2)}
 
 
-def test_console_sink_prints_rows(spark, capsys):
-    from farmrpg_etl_spark.sinks.writers import console_sink
-
-    console_sink(spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string"), n=5)
-    out = capsys.readouterr().out
-    assert "a" in out and "b" in out  # K8: rows actually reach stdout
-
-
 def test_read_version_time_travel_and_retention(spark, tmp_path):
     from farmrpg_etl_spark.sinks.writers import ParquetTable, insert_if_absent, merge_update
     import pytest

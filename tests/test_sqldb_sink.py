@@ -84,27 +84,6 @@ def test_upsert(spark, tmp_path):
     assert back.filter("flags = 2").count() == 50  # last write wins
 
 
-def test_partial_doc_update_no_clobber(spark, tmp_path):
-    """K4 / firestore merge semantics: NULL incoming fields keep the
-    existing value instead of clobbering it."""
-    spec = _spec(tmp_path)
-    sqldb.insert_absent(_messages(spark, n=20, flags=7), spec)
-    partial = spark.range(0, 20).selectExpr(
-        "id",
-        "cast(null as string) as room",      # must NOT clobber
-        "concat('renamed', id) as username",  # must update
-        "cast(null as timestamp) as ts",
-        "cast(null as int) as flags",
-    )
-    sqldb.partial_doc_update(partial, spec)
-    back = sqldb.read_table(spark, spec)
-    assert back.count() == 20
-    row = back.filter("id = 4").first()
-    assert row["username"] == "renamed4"
-    assert row["room"] == "room1" and row["flags"] == 7
-    assert row["ts"] == datetime(2024, 6, 1, 12, 0, 4)
-
-
 def test_partitioned_read_matches_driver_read(spark, tmp_path):
     spec = _spec(tmp_path)
     sqldb.insert_absent(_messages(spark, n=200), spec)
